@@ -50,6 +50,16 @@ try:
 except Exception:  # pragma: no cover - any build/load problem => Python path
     _cbeam = None
 
+
+def _native_cfg(cfg) -> bool:
+    """Configs the native walk is written for: 1..128 beams and no
+    negative ``search_n``. Anything else takes the reference Python path
+    (the C kernel rejects beam_size < 1 and reads a negative search_n as
+    uncapped, where Python slices from the end)."""
+    sn = cfg.search_n
+    return 1 <= cfg.beam_size <= 128 and (sn is None or sn == "None" or int(sn) >= 0)
+
+
 NIL = "$NIL$"
 NIL_SPAN = (-1, -1)
 
@@ -303,7 +313,7 @@ def beam_search_ie(att: np.ndarray, feat: SentenceFeatures, cfg):
         # (kgm.py:402-404)
         pruned = pruned + np.triu(pruned.T, k=1)
     n_side = pruned.shape[0]
-    if _cbeam is not None and n_side <= 256 and cfg.beam_size <= 128:
+    if _cbeam is not None and n_side <= 256 and _native_cfg(cfg):
         # native path: identical walk enumeration/ordering/arithmetic in C
         # (_cbeam.c) — the expensive per-sentence loop without interpreter
         # overhead. Fallback below is the reference Python implementation.
@@ -561,7 +571,7 @@ def process_sentence_tuples(docid: str, offset: int, text: str, cfg, att_provide
         and hasattr(_cbeam, "ie_sentence")
         and cfg.beam_mode != "RC"
         and rank_code is not None
-        and cfg.beam_size <= 128
+        and _native_cfg(cfg)
     )
     if use_c:
         payload = []

@@ -96,6 +96,32 @@ NESTED_SCHEMA, _, _ = _schemas(True, True)
 _NESTED_COLUMNS = [f.name for f in NESTED_SCHEMA.fields]
 
 
+# Plan-estimated sentence bytes one kernel task carries. Every Python task
+# pays a fixed worker set-up of ~0.27 s CPU, whatever its row count: the
+# worker's ``setup_spark_files`` calls ``importlib.invalidate_caches()``,
+# which makes each of its zipimporters re-read the pyspark.zip directory
+# (CPython 3.11, PySpark 4.1). The kernel (DeepExConfig.task(), native
+# beam walks, rerank distances) works through ~17 KB/s of the optimizer's
+# size estimate per core: 1,769 crawl sentences, estimated at 20,628 B, in
+# 1.2 s single-threaded (4-core x86 host). 64 KiB is ~3.8 s of kernel work
+# per task, so the set-up stays under a tenth of it.
+_KERNEL_BYTES_PER_TASK = 64 << 10
+
+
+def kernel_partitions(sentences: DataFrame) -> int:
+    """Round-robin partition count for the kernel stage, sized from the
+    optimizer's estimate for ``sentences`` (no job runs). At least
+    defaultParallelism, so every core works; at most 8 task waves, not 2:
+    with coarse tasks a single slowed core (steal burst, thermal throttle,
+    straggler node) stretches the final wave by a whole task, and finer
+    tasks let the scheduler route around it. An unknown size (an RDD-backed
+    input is estimated at ``spark.sql.defaultSizeInBytes``) takes the
+    ceiling."""
+    dp = sentences.sparkSession.sparkContext.defaultParallelism
+    size = int(sentences._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return max(dp, min(8 * dp, -(-size // _KERNEL_BYTES_PER_TASK)))
+
+
 def extract_candidates(
     sentences: DataFrame, cfg: DeepExConfig, repartition: bool = True
 ) -> DataFrame:
@@ -113,19 +139,14 @@ def extract_candidates(
     from pyspark.sql import functions as F
 
     if repartition:
-        # 8 task waves, not 2: the kernel stage is the wall-clock floor, and
-        # with coarse tasks (parallelism*2) a single slowed core — hypervisor
-        # steal burst, thermal throttle, straggler node on a real cluster —
-        # stretches the final wave by a whole task (~minutes at web scale).
-        # Finer tasks let the scheduler route around heterogeneous core
-        # speeds; per-task overhead (python worker reuse, Arrow setup) is
-        # milliseconds against multi-second tasks.
-        n_parts = cfg.repartition_by_url or (
-            sentences.sparkSession.sparkContext.defaultParallelism * 8
-        )
+        n_parts = cfg.repartition_by_url or kernel_partitions(sentences)
         sentences = sentences.repartition(n_parts)
 
     compute_dis = cfg.rerank_sorted
+    if compute_dis:
+        from deepex_spark.operators.rerank import require_symmetric_encoder
+
+        require_symmetric_encoder(cfg)
     with_text = cfg.emit_sent_text
     with_key = cfg.emit_triple_key
     nested_schema, per_cand, flat_cols = _schemas(with_text, with_key)

@@ -130,9 +130,17 @@ def match_aliases(
 
 
 def alias_entity_table(spark: SparkSession, aliases: dict[str, str]) -> DataFrame:
-    """alias surface -> canonical entity name, as a dimension table."""
-    rows = [(k.lower(), v) for k, v in aliases.items()]
-    return spark.createDataFrame(rows, "alias string, canonical string")
+    """alias surface -> canonical entity name, as a dimension table. Built
+    from an Arrow table, which the JVM reads directly: from a Python list
+    it would be a pickled Python RDD, and broadcasting it would start
+    Python tasks."""
+    import pyarrow as pa
+
+    table = pa.table(
+        [[k.lower() for k in aliases], list(aliases.values())],
+        schema=pa.schema([("alias", pa.string()), ("canonical", pa.string())]),
+    )
+    return spark.createDataFrame(table)
 
 
 def link_triples(

@@ -140,6 +140,18 @@ def candidate_distances(
     return (d, d)
 
 
+def require_symmetric_encoder(cfg: DeepExConfig) -> None:
+    """``candidate_distances`` hands the reversed emission the forward
+    distance, which holds only for the surrogate hash-embedding encoder.
+    Fail before any work for another encoder rather than rerank with a
+    wrong distance."""
+    if cfg.encoder_provider != "surrogate":
+        raise NotImplementedError(
+            f"rerank distances for encoder_provider={cfg.encoder_provider!r}: "
+            "only the 'surrogate' encoder is symmetric under subj/obj reversal"
+        )
+
+
 def add_contrastive_distance(triples: DataFrame, cfg: DeepExConfig) -> DataFrame:
     dim = cfg.encoder_dim
 

@@ -116,11 +116,14 @@ def build_knowledge_graph(
         from deepex_spark.operators.canonicalize import resolve_entities
 
         canon = resolve_entities(canon)
-    vertices = build_vertices(canon, cfg.run_id)
-    edges = build_edges(canon, cfg.run_id)
-    if catalog is not None:
-        catalog.write(vertices, "vertices")
-        catalog.write(edges, "edges")
-        vertices = catalog.read(spark, "vertices")
-        edges = catalog.read(spark, "edges")
-    return triples, vertices, edges
+    if catalog is None:
+        return triples, build_vertices(canon, cfg.run_id), build_edges(canon, cfg.run_id)
+    # both writes read canon: run link and the lemmatize UDF once for the
+    # two, and drop the cache before returning so none outlives the call
+    canon = canon.persist()
+    try:
+        catalog.write(build_vertices(canon, cfg.run_id), "vertices")
+        catalog.write(build_edges(canon, cfg.run_id), "edges")
+    finally:
+        canon.unpersist()
+    return triples, catalog.read(spark, "vertices"), catalog.read(spark, "edges")

@@ -408,8 +408,25 @@ class Catalog:
 
     # -- metrics ----------------------------------------------------------
     def log_metric(self, spark: SparkSession, stage: str, rows: int, wall_s: float, run_id: str = "run0"):
-        df = spark.createDataFrame(
-            [(run_id, stage, rows, float(wall_s), time.time())],
-            "run_id string, stage string, rows long, wall_s double, ts double",
+        """Append one row to the ``metrics`` table, written in-process as a
+        one-row parquet file with pyarrow: a DataFrame built from a Python
+        list is a pickled Python RDD, and writing it costs a Spark job of
+        Python tasks. ``spark`` stays in the signature for callers."""
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        table = pa.table(
+            [[run_id], [stage], [rows], [float(wall_s)], [time.time()]],
+            schema=pa.schema([("run_id", pa.string()), ("stage", pa.string()),
+                              ("rows", pa.int64()), ("wall_s", pa.float64()),
+                              ("ts", pa.float64())]),
         )
-        df.coalesce(1).write.mode("append").parquet(self.path("metrics"))
+        out = self.path("metrics")
+        os.makedirs(out, exist_ok=True)
+        name = f"part-{uuid.uuid4()}.parquet"
+        # readers skip "_"-prefixed files, so the rename publishes the row whole
+        tmp = os.path.join(out, "_" + name)
+        pq.write_table(table, tmp, store_schema=False)
+        os.replace(tmp, os.path.join(out, name))

@@ -85,3 +85,40 @@ def test_process_sentence_end_to_end_identical():
             sk._cbeam = saved
         na = process_sentence(f"p{i}", 3, sent, cfg, provider)
         assert py == na
+
+
+# out-of-contract configs: the C kernel rejects beam_size < 1 ("topk out
+# of range") and reads a negative search_n as uncapped, where Python
+# slices from the end; both gates must send them to the Python path
+_OFF_CONTRACT = [{"beam_size": 0}, {"search_n": -2}]
+
+
+@pytest.mark.parametrize("kw", _OFF_CONTRACT)
+def test_walk_gate_sends_off_contract_configs_to_python(kw):
+    cfg = DeepExConfig.task(**kw)
+    provider = get_attention_provider(cfg)
+    n_walks = 0
+    for i in range(10):
+        feat = featurize(f"g{i}", 0, synth_doc_for(i, seed=13)[:200], cfg)
+        att = provider.attention(feat.tokens)
+        py = _python_walks(att, feat, cfg)
+        assert _native_walks(att, feat, cfg) == py
+        n_walks += len(py)
+    assert n_walks > 0 or cfg.beam_size == 0
+
+
+@pytest.mark.parametrize("kw", _OFF_CONTRACT)
+def test_sentence_gate_sends_off_contract_configs_to_python(kw):
+    from deepex_spark.kernel.sentence_kernel import process_sentence_tuples
+
+    cfg = DeepExConfig.task(**kw)
+    provider = get_attention_provider(cfg)
+    for i in range(10):
+        sent = synth_doc_for(i, seed=13)[:200]
+        saved = sk._cbeam
+        sk._cbeam = None
+        try:
+            py = process_sentence_tuples(f"g{i}", 0, sent, cfg, provider)
+        finally:
+            sk._cbeam = saved
+        assert process_sentence_tuples(f"g{i}", 0, sent, cfg, provider) == py

@@ -20,7 +20,11 @@ def test_build_kg_with_catalog_and_resume(spark, tmp_path):
         {"barack obama": "Barack Obama", "the president": "Barack Obama",
          "president": "Barack Obama"},
     )
+    cached_before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     triples, vertices, edges = build_knowledge_graph(pages, cfg, alias_df=alias_df, catalog=cat)
+    # the build caches canon for its two writes and drops it before returning
+    # (subset: the context cleaner may drop an earlier test's cache meanwhile)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= cached_before
     nt, nv, ne = triples.count(), vertices.count(), edges.count()
     assert nt > 0 and nv > 0 and ne > 0
     # checkpoints + lineage on disk

@@ -76,6 +76,19 @@ def test_link_triples_broadcast_and_salted(spark):
         assert out["Barack Obama"]["obj_linked"] is False
 
 
+def test_alias_entity_table_schema_and_empty(spark):
+    from deepex_spark.operators.linking import alias_entity_table
+
+    df = alias_entity_table(spark, {"Barack Obama": "Barack Obama", "POTUS": "Barack Obama"})
+    assert df.schema.simpleString() == "struct<alias:string,canonical:string>"
+    assert sorted(map(tuple, df.collect())) == [
+        ("barack obama", "Barack Obama"), ("potus", "Barack Obama")
+    ]
+    empty = alias_entity_table(spark, {})
+    assert empty.schema.simpleString() == "struct<alias:string,canonical:string>"
+    assert empty.count() == 0
+
+
 def test_salted_join_matches_plain(spark):
     from deepex_spark.operators.joins import salted_equi_join
 
@@ -125,9 +138,16 @@ def test_catalog_checkpoint_resume(spark, tmp_path):
     before = cat.read(spark, "stage1").count()
     cat.checkpoint(df1, "stage1", n_buckets=8, run_id="r2")
     assert cat.read(spark, "stage1").count() == before
-    # metrics table appends
+    # metrics table appends, one row per call
     cat.log_metric(spark, "stage1", before, 1.23, "r1")
     assert cat.read(spark, "metrics").count() == 1
+    cat.log_metric(spark, "stage2", 7, 0.5, "r1")
+    m = cat.read(spark, "metrics")
+    assert m.schema.simpleString() == (
+        "struct<run_id:string,stage:string,rows:bigint,wall_s:double,ts:double>"
+    )
+    got = sorted((r["stage"], r["rows"], r["wall_s"], r["run_id"]) for r in m.collect())
+    assert got == [("stage1", before, 1.23, "r1"), ("stage2", 7, 0.5, "r1")]
 
 
 class TestEntityMatchPairs:

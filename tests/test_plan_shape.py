@@ -145,3 +145,26 @@ def test_html_page_text_no_exchange(spark):
     plan = _logical_plan(extract_page_text(pages))
     for token in ("Join", "Aggregate", "Repartition", "Sort"):
         assert _count(plan, token) == 0, (token, plan)
+
+
+def test_kernel_stage_sized_from_plan_estimate(spark, tmp_path):
+    """The kernel's round-robin partition count comes from the optimizer's
+    size estimate: a tiny input gets one task per core, an input of
+    unknown size (RDD-backed) the 8-wave ceiling."""
+    import re
+
+    from deepex_spark.functions.sentencize import sentencize
+    from deepex_spark.operators.extract import extract_candidates
+    from deepex_spark.pipeline import normalize_pages
+
+    cfg = DeepExConfig.small()
+    dp = spark.sparkContext.defaultParallelism
+    _pages(spark).write.parquet(str(tmp_path / "pages"))
+    tiny = spark.read.parquet(str(tmp_path / "pages"))
+    unknown = spark.sparkContext.parallelize(
+        [(f"http://x/{i}", f"Obama lives in Hawaii number {i}.") for i in range(6)]
+    ).toDF("url string, text string")
+    for pages, want in ((tiny, dp), (unknown, 8 * dp)):
+        cand = extract_candidates(sentencize(normalize_pages(pages, cfg)), cfg)
+        n_parts = re.search(r"Repartition (\d+), true", _logical_plan(cand)).group(1)
+        assert int(n_parts) == want

@@ -6,6 +6,8 @@ so ``candidate_distances`` computes the embedding once. This test pins the
 symmetry argument against the direct two-sided computation, including
 adversarial strings (quotes, non-ASCII, repeated tokens, empties)."""
 
+import pytest
+
 from deepex_spark.operators.rerank import (
     _NON_ASCII,
     candidate_distances,
@@ -81,3 +83,26 @@ def test_reversed_distance_bit_identical():
         sentence = "$input_txt:$ " + sent
         d_rev_direct = contrastive_distance_py(sentence, obj, rel_s, subj, 64, cache)
         assert d_fwd == d_rev == d_rev_direct, (subj, rel, obj)
+
+
+def test_rerank_shortcut_refuses_asymmetric_encoder(spark):
+    """The (d, d) shortcut holds only for the surrogate encoder: both
+    distance call sites refuse any other encoder up front instead of
+    handing the reversed emission the forward distance."""
+    from dataclasses import replace
+
+    from deepex_spark.config import DeepExConfig
+    from deepex_spark.local_oracle import local_candidates
+    from deepex_spark.operators.extract import extract_candidates
+
+    cfg = replace(DeepExConfig.small(), encoder_provider="hf", rerank_sorted=True)
+    sents = spark.createDataFrame(
+        [("d1", 0, 0, "Obama lives in Hawaii.")],
+        "docid string, sent_pos int, sent_offset int, sent_text string",
+    )
+    with pytest.raises(NotImplementedError, match="surrogate"):
+        extract_candidates(sents, cfg)
+    with pytest.raises(NotImplementedError, match="surrogate"):
+        local_candidates([("d1", "Obama lives in Hawaii.")], cfg)
+    # without rerank no distance is computed, so any encoder is fine
+    local_candidates([("d1", "Obama lives in Hawaii.")], replace(cfg, rerank_sorted=False))
