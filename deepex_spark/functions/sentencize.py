@@ -38,19 +38,27 @@ Offsets come in three modes (``mode`` param / ``cfg.sentencize_offsets``):
 * ``"auto"`` (default, the 100-TB path): per-doc switch in ONE pass over
   the source — docs with ``length(text) <= scan_max_len`` take the
   reference-faithful JVM scan branch; longer docs take the linear
-  reconstruct branch. The pandas UDF's input is ``when(is_long, text)`` so
-  short docs ship only a null slot through Arrow (no text bytes cross the
-  Python boundary for the common case), and there is no second source scan
-  or duplicated upstream exchange as a filter+union plan would cost.
+  reconstruct branch. There is no second source scan or duplicated
+  upstream exchange as a filter+union plan would cost.
+
+All three modes run one plan (``prepare_docs`` -> ``explode_sentences``):
+the mode only sets the length past which the Python node reconstructs a
+doc (``_long_threshold``), and the JVM scan covers every doc it did not.
+The pipeline runs its text normalization in the same Python node, so the
+whole front end costs one Python worker per task.
 """
 
 from __future__ import annotations
 
+import math
 import re
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+
+from deepex_spark.functions.text import normalize_text_py
 
 SENT_BOUNDARY_SRC = r"([.!?])\s+"
 SENT_MARKER = "\x01"
@@ -84,17 +92,14 @@ def _reconstruct_doc(text: str):
     return out
 
 
-def _reconstruct_series(s: pd.Series) -> pd.Series:
-    return s.map(_reconstruct_doc, na_action="ignore")
-
-
 _PIECES_TYPE = "array<struct<sent:string, off:long>>"
+_DOCS_TYPE = f"struct<text:string, long_pieces:{_PIECES_TYPE}>"
 
 
 def _scan_pieces(text_col: str) -> Column:
     """JVM-side (sent, first-occurrence off) array over the raw split
-    pieces — same semantics as the classic scan plan, shaped to union with
-    the reconstruct UDF output inside one CASE expression."""
+    pieces — same semantics as the classic scan plan, shaped like the
+    Python node's ``long_pieces`` so the two coalesce into one column."""
     marked = F.regexp_replace(F.col(text_col), SENT_BOUNDARY_SRC, "$1" + SENT_MARKER)
     return F.transform(
         F.split(marked, SENT_MARKER),
@@ -118,6 +123,83 @@ def _explode_pieces(df: DataFrame, docid_col: str, pieces: Column) -> DataFrame:
     ).filter(F.length("sent_text") > 0)
 
 
+def _long_threshold(mode: str, scan_max_len: int) -> float:
+    """Docs longer than this take the reconstruct arm: ``auto`` switches at
+    ``scan_max_len``, ``scan`` never reconstructs, ``reconstruct`` always."""
+    if mode == "auto":
+        return scan_max_len
+    if mode == "scan":
+        return math.inf
+    if mode == "reconstruct":
+        return -1
+    raise ValueError("sentencize mode must be 'scan', 'reconstruct' or 'auto'")
+
+
+def _docs_udf(normalize: bool, max_len: float):
+    def prepare(text: pd.Series, html: pd.Series) -> pd.DataFrame:
+        if normalize:
+            text = [normalize_text_py(t, h) for t, h in zip(text, html)]
+        long_pieces = [
+            _reconstruct_doc(t) if t is not None and len(t) > max_len else None
+            for t in text
+        ]
+        return pd.DataFrame({"text": text, "long_pieces": long_pieces})
+
+    # built lazily: pyspark 4 resolves the return type against the active
+    # session, which doesn't exist at import time
+    return pandas_udf(prepare, _DOCS_TYPE)
+
+
+def prepare_docs(
+    df: DataFrame,
+    docid_col: str = "docid",
+    text_col: str = "text",
+    html_col: str | None = None,
+    normalize: bool = False,
+    mode: str = "auto",
+    scan_max_len: int = DEFAULT_SCAN_MAX_LEN,
+) -> DataFrame:
+    """-> (docid, text, long_pieces): the front end's one Python node.
+
+    A single pandas UDF over (text, html) runs, per row, the ``normalize``
+    chain (html fallback for a null ``text``, paren blanking) and, for docs
+    past the mode's length threshold, ``_reconstruct_doc``; ``long_pieces``
+    is null for every other doc. Spark gives each ArrowEvalPython node its
+    own Python worker per task, so one node is one worker, not one per
+    step. When neither step can apply (no normalization, ``scan`` mode) no
+    Python node is planned at all.
+    """
+    max_len = _long_threshold(mode, scan_max_len)
+    if html_col is not None and text_col not in df.columns:
+        text = F.lit(None).cast("string")
+    else:
+        text = F.col(text_col)
+    if not normalize and max_len == math.inf:
+        return df.select(
+            F.col(docid_col).alias("docid"),
+            text.alias("text"),
+            F.lit(None).cast(_PIECES_TYPE).alias("long_pieces"),
+        )
+    # html crosses into Python only where it is used: rows with null text
+    html = F.when(text.isNull(), F.col(html_col)) if html_col else F.lit(None).cast("string")
+    docs = df.select(
+        F.col(docid_col).alias("docid"),
+        _docs_udf(normalize, max_len)(text, html).alias("_d"),
+    )
+    return docs.select("docid", "_d.text", "_d.long_pieces")
+
+
+def explode_sentences(docs: DataFrame, mode: str = "auto") -> DataFrame:
+    """``prepare_docs`` output -> (docid, sent_pos, sent_offset, sent_text).
+    The pieces are ``long_pieces`` where the Python node reconstructed and
+    the JVM first-occurrence scan everywhere else; ``reconstruct`` mode has
+    no scan arm, so its plan carries no per-sentence doc scan."""
+    pieces = F.col("long_pieces")
+    if mode != "reconstruct":
+        pieces = F.coalesce(pieces, _scan_pieces("text"))
+    return _explode_pieces(docs, "docid", pieces)
+
+
 def sentencize(
     df: DataFrame,
     text_col: str = "text",
@@ -133,22 +215,7 @@ def sentencize(
     semantics), linear aligned-offset reconstruction, or the per-doc
     ``auto`` switch at ``scan_max_len`` chars.
     """
-    if mode == "reconstruct":
-        from pyspark.sql.functions import pandas_udf
-
-        recon = pandas_udf(_reconstruct_series, _PIECES_TYPE)
-        return _explode_pieces(df, docid_col, recon(F.col(text_col)))
-    if mode == "auto":
-        from pyspark.sql.functions import pandas_udf
-
-        recon = pandas_udf(_reconstruct_series, _PIECES_TYPE)
-        is_long = F.length(F.col(text_col)) > F.lit(int(scan_max_len))
-        pieces = F.when(
-            is_long, recon(F.when(is_long, F.col(text_col)))
-        ).otherwise(_scan_pieces(text_col))
-        return _explode_pieces(df, docid_col, pieces)
-    if mode != "scan":
-        raise ValueError("sentencize mode must be 'scan', 'reconstruct' or 'auto'")
-    # the scan branch IS auto's short-doc arm — one definition of the
-    # semantics (_scan_pieces), so the two modes cannot silently diverge
-    return _explode_pieces(df, docid_col, _scan_pieces(text_col))
+    docs = prepare_docs(
+        df, docid_col, text_col, mode=mode, scan_max_len=scan_max_len
+    )
+    return explode_sentences(docs, mode)

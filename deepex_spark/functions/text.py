@@ -8,14 +8,12 @@ The reference's normalization chain, reproduced byte-identically per url:
    runs of spaces of identical length so all char offsets stay stable
    (reference ``src/deepex/data/text_handler.py:50-51``). Spark's builtin
    ``regexp_replace`` cannot emit a match-length-dependent replacement, so
-   this one stage is a vectorized scalar pandas UDF;
+   this step is Python: ``normalize_text_py`` (html fallback, then
+   blanking) is the row function the pipeline's one front-end pandas UDF
+   runs (``functions/sentencize.py::prepare_docs``);
 3. docid zero-pad to 40 chars (``text_handler.py:59``) — ``lpad``;
 4. non-ASCII scrub for relations (``distillation.py:100-101``) — builtin
-   ``regexp_replace``;
-5. exact Python ``str.title()`` (``kgm.py:131-132``) — pandas UDF, because
-   Spark's ``initcap`` differs on digits/apostrophes. (The pipeline itself
-   title-cases inside the kernel; this column function exists for
-   standalone/relational use.)
+   ``regexp_replace`` in ``operators/distill.py::distill_project``.
 """
 
 from __future__ import annotations
@@ -61,19 +59,6 @@ def zero_pad_docid(col: Column) -> Column:
     return F.lpad(col.cast("string"), 40, "0")
 
 
-def scrub_non_ascii(col: Column) -> Column:
-    """distillation.py:100-101 — non-ASCII runs to single space, trimmed."""
-    return F.trim(F.regexp_replace(col, r"[^\x00-\x7F]+", " "))
-
-
-def _py_title_series(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: x.title(), na_action="ignore")
-
-
-def py_title(col: Column) -> Column:
-    return pandas_udf(_py_title_series, "string")(col)
-
-
 def html_to_text_py(html: bytes | str) -> str:
     """Deterministic HTML -> text for the input_hint's ``html BINARY`` column:
     drop script/style blocks, strip tags, decode the few entities the
@@ -90,12 +75,10 @@ def html_to_text_py(html: bytes | str) -> str:
     return " ".join(html.split())
 
 
-def _html_to_text_series(s: pd.Series) -> pd.Series:
-    return s.map(html_to_text_py, na_action="ignore")
-
-
-def html_to_text(col: Column) -> Column:
-    return pandas_udf(_html_to_text_series, "string")(col)
+def normalize_text_py(text: str | None, html: bytes | str | None = None) -> str | None:
+    """One page's text as the pipeline sentencizes it: the html rendering
+    when ``text`` is null, then length-preserving paren blanking."""
+    return blank_parens_py(text if text is not None else html_to_text_py(html))
 
 
 def nfc_normalize_py(text: str) -> str:

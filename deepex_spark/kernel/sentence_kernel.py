@@ -165,18 +165,6 @@ def entity_segments(feat: SentenceFeatures, cfg, names=None, add_extra=None):
     return sorted(eid), sent_eid_sids
 
 
-def _segment_location(a: int, u: int, v: int) -> int:
-    return (a < u) + (a < v)
-
-
-def _cross_segment(a: int, last: int, node: int, bound: int) -> bool:
-    return (
-        last != node
-        and last != bound
-        and _segment_location(a, node, bound) != _segment_location(last, node, bound)
-    )
-
-
 from operator import itemgetter as _itemgetter
 
 _MEAN_KEY = _itemgetter(3)

@@ -101,6 +101,17 @@ def ivf_assign_vectorized(
 _MAX_INLINE_LITERALS = 4096
 
 
+def _finite_batch(v: pd.Series, site: str) -> np.ndarray:
+    """Stack one Arrow batch of embeddings, failing loudly on NaN/inf like
+    the length guard: the fold's strict-``>`` running max and numpy's
+    argmax/argsort order non-finite dots differently, so they would silently
+    change which centroid a vector gets or which lists a query probes."""
+    mat = np.stack([np.asarray(x, dtype=np.float64) for x in v])
+    if not np.isfinite(mat).all():
+        raise ValueError(f"{site}: non-finite embedding value (NaN or inf)")
+    return mat
+
+
 def ivf_assign_fold(
     emb: DataFrame, centroids: list[list[float]], vec_col: str = "v"
 ) -> DataFrame:
@@ -125,7 +136,7 @@ def ivf_assign_fold(
     def assign(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="int32")
-        mat = np.stack([np.asarray(x, dtype=np.float64) for x in v])
+        mat = _finite_batch(v, "ivf_assign_fold")
         acc = np.zeros((mat.shape[0], k), dtype=np.float64)
         for d in range(dim):  # fold order: ((0 + x0*y0) + x1*y1) + ...
             acc += mat[:, d : d + 1] * cm[None, :, d]
@@ -201,7 +212,7 @@ def ivf_search(
     def probe_ids(qv: pd.Series) -> pd.Series:
         if len(qv) == 0:
             return pd.Series([], dtype=object)
-        mat = np.stack([np.asarray(x, dtype=np.float64) for x in qv])
+        mat = _finite_batch(qv, "ivf_search probe")
         acc = np.zeros((mat.shape[0], k_c), dtype=np.float64)
         for d in range(dim_c):  # fold order, as in ivf_assign_fold
             acc += mat[:, d : d + 1] * cm[None, :, d]

@@ -125,11 +125,6 @@ def distill_triples(candidates: DataFrame, cfg: DeepExConfig) -> DataFrame:
     return with_doc_rank(distill_project(candidates, cfg))
 
 
-def count_triples(triples: DataFrame) -> int:
-    """O23 sanity metric (scripts/post_processing.py:35-37)."""
-    return triples.count()
-
-
 def corpus_dedup(candidates: DataFrame, cfg: DeepExConfig, topk_per_sentence: int | None = 100) -> DataFrame:
     """Corpus-level triple aggregation (``Distillation.deduplicate``,
     distillation.py:80-98): per-sentence top-k candidates merged across the

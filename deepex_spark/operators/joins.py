@@ -1,4 +1,4 @@
-"""Join strategy utilities: broadcast-with-fallback and salted skew joins.
+"""Join strategy utilities: salted skew joins, the fallback to a broadcast.
 
 The north_rule requires "entity linking against a broadcast alias dictionary
 with salted-hash-join skew mitigation". The alias dictionary (reference
@@ -16,10 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def broadcast_equi_join(big: DataFrame, small: DataFrame, on: str | list, how: str = "inner") -> DataFrame:
-    return big.join(F.broadcast(small), on, how)
 
 
 def salted_equi_join(

@@ -16,25 +16,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deepex_spark.config import DeepExConfig
-from deepex_spark.functions.sentencize import sentencize
-from deepex_spark.functions.text import blank_parens, html_to_text
+from deepex_spark.functions.sentencize import explode_sentences, prepare_docs
 from deepex_spark.operators.distill import distill_triples
 from deepex_spark.operators.extract import extract_candidates
 from deepex_spark.operators.rerank import rerank_triples
 
 
-def normalize_pages(pages: DataFrame, cfg: DeepExConfig) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) -> (docid, text) with the
-    byte-identical reference normalization chain applied. The docid is the
-    url (web path) — callers with numeric ids zero-pad upstream."""
-    df = pages
-    if "text" in df.columns and "html" in df.columns:
-        df = df.withColumn(
-            "text", F.coalesce(F.col("text"), html_to_text(F.col("html")))
-        )
-    elif "html" in df.columns:
-        df = df.withColumn("text", html_to_text(F.col("html")))
-    docid = "url" if "url" in df.columns else "docid"
+def _front_end(pages: DataFrame, cfg: DeepExConfig, mode: str) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) -> (docid, text, long_pieces):
+    the byte-identical reference normalization chain and the reconstruct
+    arm of sentencize ``mode``, in ONE Python node (``prepare_docs``). The
+    docid is the url (web path) — callers with numeric ids zero-pad
+    upstream."""
+    docid = "url" if "url" in pages.columns else "docid"
+    html = "html" if "html" in pages.columns else None
+    docs = prepare_docs(
+        pages, docid, "text", html, normalize=True, mode=mode,
+        scan_max_len=cfg.sentencize_scan_max_len,
+    )
     # NOTE on input layout (guide §6): the normalize/sentencize front end
     # runs at SCAN parallelism — a corpus delivered as fewer splits than
     # cores (one small parquet file at bench scale) runs it on few cores
@@ -46,10 +45,15 @@ def normalize_pages(pages: DataFrame, cfg: DeepExConfig) -> DataFrame:
     # stage + plan-side partition probe) against a front end that is
     # cheap O(bytes) regex work — the expensive O(beam) kernel is already
     # rebalanced at sentence granularity downstream.
-    out = df.select(F.col(docid).alias("docid"), blank_parens(F.col("text")).alias("text"))
     if cfg.repartition_by_url:
-        out = out.repartition(cfg.repartition_by_url, F.xxhash64("docid"))
-    return out
+        docs = docs.repartition(cfg.repartition_by_url, F.xxhash64("docid"))
+    return docs
+
+
+def normalize_pages(pages: DataFrame, cfg: DeepExConfig) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) -> (docid, text) with the
+    byte-identical reference normalization chain applied."""
+    return _front_end(pages, cfg, "scan").select("docid", "text")
 
 
 def extract_triples(pages: DataFrame, cfg: DeepExConfig, rerank: bool | None = None) -> DataFrame:
@@ -60,16 +64,12 @@ def extract_triples(pages: DataFrame, cfg: DeepExConfig, rerank: bool | None = N
 
     do_rerank = cfg.rerank_sorted if rerank is None else rerank
     cfg = _replace(cfg, rerank_sorted=do_rerank)
-    normalized = normalize_pages(pages, cfg)
-    sentences = sentencize(
-        normalized,
-        mode=cfg.sentencize_offsets,
-        scan_max_len=cfg.sentencize_scan_max_len,
-    )
+    mode = cfg.sentencize_offsets
+    sentences = explode_sentences(_front_end(pages, cfg, mode), mode)
     # ONE Python stage: the kernel also computes the contrastive distances
     # (when reranking), so the docid exchange after distill_project is the
     # only shuffle and both window sorts reuse it. When repartition_by_url
-    # already exchanged the pages (normalize_pages), skip the kernel-stage
+    # already exchanged the pages (_front_end), skip the kernel-stage
     # round-robin — one pre-kernel exchange, never two.
     candidates = extract_candidates(
         sentences, cfg, repartition=not cfg.repartition_by_url

@@ -373,3 +373,32 @@ def test_rrf_fuse_needs_two(spark):
 
     with _pytest.raises(ValueError):
         rrf_fuse([("only", spark.range(1))])
+
+
+def _one_bad_vector(spark, bad):
+    rows = [(i, [float(i + d) for d in range(8)]) for i in range(6)]
+    rows[0] = (0, [bad] + rows[0][1][1:])
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_ivf_assign_fold_rejects_non_finite(spark, bad):
+    """Non-finite embeddings fail loudly in the coarse assignment instead of
+    silently landing on whichever centroid numpy's argmax picks."""
+    from deepex_spark.operators.ann import ivf_assign_fold
+
+    e = _one_bad_vector(spark, bad).select(
+        "vec_id", F.col("embedding").alias("v")
+    )
+    with pytest.raises(Exception, match="ivf_assign_fold: non-finite"):
+        ivf_assign_fold(e, ivf_centroids(4, 8, 7)).collect()
+
+
+def test_ivf_search_probe_rejects_non_finite(spark):
+    """A non-finite query vector fails loudly in probe selection (the
+    broadcast probe side is built before the corpus side is assigned)."""
+    emb = _one_bad_vector(spark, float("nan"))
+    out = ivf_search(emb, F.col("vec_id") == 0, k_centroids=4, nprobe=2,
+                     topk=2, seed=7, dim=8)
+    with pytest.raises(Exception, match="ivf_search probe: non-finite"):
+        out.collect()

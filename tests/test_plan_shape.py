@@ -168,3 +168,22 @@ def test_kernel_stage_sized_from_plan_estimate(spark, tmp_path):
         cand = extract_candidates(sentencize(normalize_pages(pages, cfg)), cfg)
         n_parts = re.search(r"Repartition (\d+), true", _logical_plan(cand)).group(1)
         assert int(n_parts) == want
+
+
+def test_front_end_is_one_python_node(spark):
+    """The html fallback, paren blanking and sentencize's reconstruct arm run
+    in ONE ArrowEvalPython node: Spark gives every such node its own Python
+    worker per task, so three nodes held three workers per core. The kernel
+    stage is the plan's only other Python node."""
+    from deepex_spark.pipeline import extract_triples
+
+    rows = [
+        (f"http://x/{i}", None if i % 2 else f"Obama (x) lives in Hawaii number {i}.",
+         bytearray(b"<p>Paris is in France.</p>"))
+        for i in range(6)
+    ]
+    pages = spark.createDataFrame(rows, "url string, text string, html binary")
+    for cfg in (DeepExConfig.small(), replace(DeepExConfig.small(), repartition_by_url=4)):
+        plan = extract_triples(pages, cfg)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert plan.count("MapInPandas") == 1, plan

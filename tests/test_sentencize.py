@@ -1,3 +1,5 @@
+import pytest
+
 from deepex_spark.local_oracle import local_sentencize
 
 
@@ -154,3 +156,92 @@ def test_reconstruct_mode_no_instr_in_plan(spark):
     df = spark.createDataFrame([("d", "A. B.")], "docid string, text string")
     plan = sentencize(df, mode="reconstruct")._jdf.queryExecution().analyzed().toString()
     assert "instr" not in plan
+
+
+# -- the pipeline front end: html fallback, paren blanking and the reconstruct
+# arm in one Python node (pipeline._front_end + explode_sentences) -----------
+
+_MAX = 64  # small threshold so both arms run on small docs
+
+
+def _sized(n: int, lead: str = "") -> str:
+    """Exactly n code points with duplicate sentences, so the scan (first
+    occurrence) and reconstruct (aligned) offsets differ."""
+    return (lead + "It rained. " * (n // 8 + 2))[:n]
+
+
+def _reference(text, html, mode):
+    from deepex_spark.functions.sentencize import _reconstruct_doc
+    from deepex_spark.functions.text import blank_parens_py, html_to_text_py
+
+    norm = blank_parens_py(text if text is not None else html_to_text_py(html))
+    if norm is None:
+        return []
+    if mode == "reconstruct" or (mode == "auto" and len(norm) > _MAX):
+        pieces = enumerate(_reconstruct_doc(norm))
+        return [(pos, off, s) for pos, (s, off) in pieces if s]
+    return local_sentencize(norm)
+
+
+def _front_end_sentences(pages, mode):
+    from dataclasses import replace
+
+    from deepex_spark.config import DeepExConfig
+    from deepex_spark.functions.sentencize import explode_sentences
+    from deepex_spark.pipeline import _front_end
+
+    cfg = replace(DeepExConfig.small(), sentencize_scan_max_len=_MAX)
+    return {tuple(r) for r in explode_sentences(_front_end(pages, cfg, mode), mode).collect()}
+
+
+_FRONT_ROWS = [
+    ("parens", "Obama (the president) lives in Hawaii. He likes ((it)) a lot.", None),
+    ("text-wins", "It rained. It rained.", b"<p>ignored. ignored.</p>"),
+    ("null-text", None, b"<p>Paris (France) is big.</p><script>x. y.</script> Paris is big."),
+    ("null-both", None, None),
+    ("html-long", None, ("<p>" + _sized(_MAX + 20) + "</p>").encode()),
+    ("at-max", _sized(_MAX), None),
+    ("over-max", _sized(_MAX + 1), None),
+    # one non-BMP code point: Python len and Spark length() both count 1
+    ("astral-at-max", _sized(_MAX, "\U0001F600 "), None),
+    ("astral-over-max", _sized(_MAX + 1, "\U0001F600 "), None),
+]
+
+
+@pytest.mark.parametrize("mode", ["auto", "scan", "reconstruct"])
+def test_front_end_matches_python_reference(spark, mode):
+    pages = spark.createDataFrame(
+        [(u, t, bytearray(h) if h is not None else None) for u, t, h in _FRONT_ROWS],
+        "url string, text string, html binary",
+    )
+    want = {
+        (u, *s) for u, t, h in _FRONT_ROWS for s in _reference(t, h, mode)
+    }
+    assert _front_end_sentences(pages, mode) == want
+    if mode == "auto":
+        # both arms ran: duplicates share the first offset at the threshold
+        # and carry their own aligned offset one code point past it
+        for doc in ("at-max", "astral-at-max"):
+            offs = [o for u, _, o, _ in want if u == doc]
+            assert len(set(offs)) < len(offs), doc
+        for doc in ("over-max", "astral-over-max"):
+            offs = [o for u, _, o, _ in want if u == doc]
+            assert len(set(offs)) == len(offs), doc
+
+
+@pytest.mark.parametrize("mode", ["auto", "reconstruct"])
+def test_front_end_text_only_and_html_only_frames(spark, mode):
+    text_only = [(u, t) for u, t, _ in _FRONT_ROWS]
+    html_only = [(u, h) for u, _, h in _FRONT_ROWS]
+    got_t = _front_end_sentences(
+        spark.createDataFrame(text_only, "url string, text string"), mode
+    )
+    got_h = _front_end_sentences(
+        spark.createDataFrame(
+            [(u, bytearray(h) if h is not None else None) for u, h in html_only],
+            "url string, html binary",
+        ),
+        mode,
+    )
+    assert got_t == {(u, *s) for u, t in text_only for s in _reference(t, None, mode)}
+    assert got_h == {(u, *s) for u, h in html_only for s in _reference(None, h, mode)}
