@@ -39,16 +39,6 @@ def blank_parens_py(text: str) -> str:
     return text
 
 
-def _blank_parens_series(s: pd.Series) -> pd.Series:
-    return s.map(blank_parens_py, na_action="ignore")
-
-
-def blank_parens(col: Column) -> Column:
-    # UDFs are built lazily: pyspark 4 resolves the return type against the
-    # active session, which doesn't exist at import time.
-    return pandas_udf(_blank_parens_series, "string")(col)
-
-
 def ingest_charswap(col: Column) -> Column:
     """manager.py:26 — '(' / ')' to spaces; JVM-side translate."""
     return F.translate(col, "()", "  ")
@@ -97,6 +87,6 @@ def _nfc_series(s: pd.Series) -> pd.Series:
 
 
 def nfc_normalize(col: Column) -> Column:
-    # Arrow-batched; built lazily like blank_parens (pyspark 4 resolves
-    # the return type against the active session)
+    # Arrow-batched; built lazily: pyspark 4 resolves the return type
+    # against the active session, which doesn't exist at import time
     return pandas_udf(_nfc_series, "string")(col)

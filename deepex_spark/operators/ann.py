@@ -71,36 +71,6 @@ def ivf_assign(emb: DataFrame, centroids: list[list[float]], vec_col: str = "v")
     return emb.withColumn("centroid_id", F.expr(expr))
 
 
-def ivf_assign_vectorized(
-    emb: DataFrame, centroids: list[list[float]], vec_col: str = "v"
-) -> DataFrame:
-    """Scale path for the coarse assignment: a production index has K in
-    the thousands and dim in the hundreds, and inlining K*dim literals into
-    one Catalyst expression (``ivf_assign``) blows up analysis/codegen long
-    before data size matters. Here the centroid matrix ships once per task
-    inside the UDF closure and each Arrow batch does ONE BLAS matmul +
-    argmax — still a narrow projection, no exchange (plan-guarded by
-    ``tests/test_ann.py``). Ties resolve to the lowest centroid id
-    (``np.argmax`` takes the first maximum), matching ``ivf_assign``'s
-    strict-``>`` running max; equality of the two paths is asserted by
-    test on real embeddings."""
-    from pyspark.sql.functions import pandas_udf
-
-    cm = np.asarray(centroids, dtype=np.float64)
-
-    @pandas_udf("int")
-    def assign(v: pd.Series) -> pd.Series:
-        mat = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        return pd.Series(np.argmax(mat @ cm.T, axis=1).astype(np.int32))
-
-    return emb.withColumn("centroid_id", assign(F.col(vec_col)))
-
-
-# above this many inlined literals the Catalyst expression tree is the
-# bottleneck — switch the coarse assignment to the vectorized pandas path
-_MAX_INLINE_LITERALS = 4096
-
-
 def _finite_batch(v: pd.Series, site: str) -> np.ndarray:
     """Stack one Arrow batch of embeddings, failing loudly on NaN/inf like
     the length guard: the fold's strict-``>`` running max and numpy's
@@ -162,14 +132,9 @@ def ivf_search(
 
     ``dim`` is explicit (no inferring via a ``first()`` job at plan time,
     and it must agree with ``ivf_oracle_sql``'s ``dim`` — both default 64);
-    a table with different-length embeddings fails LOUDLY in both paths:
-    the vectorized path via ragged ``np.stack``, the literal path via the
-    JVM-side ``raise_error`` guard below (without it, zip_with against a
-    wrong-length literal yields null dots, the running max never fires,
-    every centroid_id becomes -1 and the probe join silently returns zero
-    rows). Small K*dim keeps the literal-expression assignment (friendlier
-    plan); production-sized indexes switch to the broadcast-matrix pandas
-    path."""
+    a table with different-length embeddings fails LOUDLY at the JVM-side
+    ``raise_error`` guard below, before the fold (which would score a
+    longer vector on its first ``dim`` entries only)."""
     e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     e = e.withColumn(
         "v",

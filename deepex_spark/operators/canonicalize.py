@@ -8,30 +8,64 @@ lemmatization, stopword-stripping variant for grouping. Entities: lowercase
 cluster sizes (never ``monotonically_increasing_id``, which is
 partition-layout-dependent).
 
-Lemmatization runs as a vectorized pandas UDF (per-word dict/suffix rules);
-everything else is JVM-side column algebra.
+Everything is JVM-side column algebra, lemmatization included: the
+per-word exception table and suffix rules of ``nlp/keywords.py::lemma``
+are one ``transform`` over the split words.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _DETERMINERS = ("the ", "a ", "an ", "this ", "that ", "these ", "those ")
 
 
-def _lemma_series(s: pd.Series) -> pd.Series:
-    from deepex_spark.nlp.keywords import lemma
+# Python's str.split() whitespace: ASCII \s plus the four separators
+# \x1c-\x1f and the Unicode spaces (Java's \s matches ASCII only)
+_PY_WHITESPACE = r"[\s\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]+"
 
-    return s.map(
-        lambda x: " ".join(lemma(w) for w in x.split()) if isinstance(x, str) else x
+
+def _lemma_expr(w: Column) -> Column:
+    """``keywords.lemma`` of one lowercase word as a column expression:
+    the exception table, then the same suffix rules in the same order."""
+    from deepex_spark.nlp.keywords import _LEMMA_EXCEPTIONS
+
+    exceptions = F.create_map(*[F.lit(x) for kv in _LEMMA_EXCEPTIONS.items() for x in kv])
+    n = F.length(w)
+
+    def drop(k: int) -> Column:
+        return w.substr(F.lit(1), n - k)
+
+    def undouble(stem: Column) -> Column:  # running -> run, stopped -> stop
+        return F.when(
+            (F.length(stem) > 2) & (stem.substr(-1, 1) == stem.substr(-2, 1)),
+            stem.substr(F.lit(1), F.length(stem) - 1),
+        ).otherwise(stem)
+
+    def ends(*suffixes: str) -> Column:
+        hit = w.endswith(suffixes[0])
+        for x in suffixes[1:]:
+            hit = hit | w.endswith(x)
+        return hit
+
+    return F.coalesce(
+        exceptions[w],
+        F.when((n > 4) & ends("ies"), F.concat(drop(3), F.lit("y")))
+        .when((n > 3) & ends("ches", "shes", "xes", "sses", "zes"), drop(2))
+        .when((n > 3) & ends("s") & ~ends("ss", "us", "is"), drop(1))
+        .when((n > 4) & ends("ing"), undouble(drop(3)))
+        .when((n > 3) & ends("ed"), undouble(drop(2)))
+        .otherwise(w),
     )
 
 
 def lemmatize_col(col: Column) -> Column:
-    return pandas_udf(_lemma_series, "string")(col)
+    """Per-word ``keywords.lemma`` of a string column, words split as
+    Python's ``str.split()`` splits them and joined by single spaces; null
+    stays null. JVM column algebra: no Python worker."""
+    words = F.filter(F.split(F.lower(col), _PY_WHITESPACE), lambda w: w != "")
+    return F.array_join(F.transform(words, _lemma_expr), " ")
 
 
 def norm_entity_col(col: Column) -> Column:

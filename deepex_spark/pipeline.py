@@ -104,9 +104,9 @@ def build_knowledge_graph(
     t0 = _time.time()
     triples = extract_triples(pages, cfg)
     if catalog is not None:
-        catalog.checkpoint(triples, "triples", bucket_col="docid", run_id=cfg.run_id)
+        n = catalog.checkpoint(triples, "triples", bucket_col="docid", run_id=cfg.run_id)
+        catalog.log_metric(spark, "triples", n, _time.time() - t0, cfg.run_id)
         triples = catalog.read(spark, "triples")
-        catalog.log_metric(spark, "triples", triples.count(), _time.time() - t0, cfg.run_id)
     if alias_df is not None:
         triples = link_triples(
             triples, alias_df, strategy=link_strategy, salt_buckets=cfg.salt_buckets
@@ -118,8 +118,8 @@ def build_knowledge_graph(
         canon = resolve_entities(canon)
     if catalog is None:
         return triples, build_vertices(canon, cfg.run_id), build_edges(canon, cfg.run_id)
-    # both writes read canon: run link and the lemmatize UDF once for the
-    # two, and drop the cache before returning so none outlives the call
+    # both writes read canon: run link and canonicalize once for the two,
+    # and drop the cache before returning so none outlives the call
     canon = canon.persist()
     try:
         catalog.write(build_vertices(canon, cfg.run_id), "vertices")

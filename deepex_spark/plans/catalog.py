@@ -3,14 +3,25 @@
 The at-scale deployment writes every stage checkpoint to Iceberg
 (``writeTo(...).append()``); this sandbox has no Iceberg jars, so the shim
 falls back to a parquet layout with a JSON manifest per table that records
-completed partition buckets — the same contract the reference implements
-with per-batch ``search_res.json`` existence checks + FileLock
+completed buckets — the same contract the reference implements with
+per-batch ``search_res.json`` existence checks + FileLock
 (``src/deepex/data/re_data.py:166-201``, ``scripts/generator.py:164-166``).
 
-Resume = ``left_anti`` join of the input's bucket ids against the
-manifest's completed buckets: only pending buckets are recomputed, with
-per-partition lineage (run_id, bucket, written_at) carried in both the
-manifest and the rows.
+A checkpoint is a FLAT file set: ``bucket`` is an ordinary data column,
+not a ``bucket=`` directory, so one write task writes one file instead of
+one per bucket it holds. The manifest maps the buckets: resume =
+``left_anti`` join of the input's bucket ids against the manifest's
+completed buckets, so only pending buckets are recomputed, with lineage
+(run_id, bucket, written_at) carried in both the manifest and the rows.
+
+Every write records the table's read schema in a ``_schema.json`` sidecar
+inside its data directory (the table root, or ``_vN`` for a snapshot), and
+reads pass it to ``.schema(...)``: parquet schema inference is a Spark job,
+the sidecar is a file read. Spark, DuckDB globs and file counters skip
+``_``-prefixed, non-``.parquet`` files, and an overwrite or an expired
+``_vN`` takes its sidecar along. A data directory without one (written by
+an older tree, after schema drift, or by a crash between the data and the
+sidecar write) is read by inference, as before.
 
 A ``_metrics`` table accumulates per-stage row counts and wall times
 (SURVEY.md §7.0 lineage/metrics requirement).
@@ -22,8 +33,86 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+_SCHEMA_FILE = "_schema.json"
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every level nullable, as parquet schema inference reads it."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _file_schema(df: DataFrame, partition_by=None) -> StructType:
+    """The schema of the parquet files ``df`` writes, as inference reads it.
+    Partition columns are left out: a read discovers them from the
+    directory names while listing files (no job) and types them from their
+    values, exactly as an inferring read does — a recorded type would
+    override that (a long column of small values infers as int). They land
+    last, after the recorded columns, on both paths."""
+    parts = set(partition_by or ())
+    return _nullable(StructType([f for f in df.schema.fields if f.name not in parts]))
+
+
+def _read_sidecar(data_dir: str) -> StructType | None:
+    try:
+        with open(os.path.join(data_dir, _SCHEMA_FILE)) as f:
+            return StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return None
+
+
+def _has_data(data_dir: str) -> bool:
+    return os.path.isdir(data_dir) and any(
+        not n.startswith(("_", ".")) for n in os.listdir(data_dir)
+    )
+
+
+def _write_sidecar(schema: StructType, data_dir: str) -> None:
+    # readers skip "_"-prefixed files, so the rename publishes it whole
+    sp = os.path.join(data_dir, _SCHEMA_FILE)
+    with open(sp + ".tmp", "w") as f:
+        json.dump(schema.jsonValue(), f)
+    os.replace(sp + ".tmp", sp)
+
+
+def _write_parquet(df: DataFrame, data_dir: str, mode: str, partition_by=None) -> None:
+    """``df.write.mode(mode).parquet(data_dir)`` keeping the sidecar true:
+    an overwrite or a first write records ``df``'s schema after the data
+    lands; an append whose schema differs from the recorded one (or into a
+    table without one) drops the sidecar before writing, so those reads
+    keep inferring."""
+    schema = _file_schema(df, partition_by)
+    fresh = mode == "overwrite" or not _has_data(data_dir)
+    if _read_sidecar(data_dir) != schema:
+        try:
+            os.unlink(os.path.join(data_dir, _SCHEMA_FILE))
+        except FileNotFoundError:
+            pass
+    w = df.write.mode(mode)
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(data_dir)
+    if fresh:
+        _write_sidecar(schema, data_dir)
+
+
+def _scan(spark: SparkSession, data_dir: str) -> DataFrame:
+    """Read a parquet data dir with its recorded schema (no Spark job),
+    or by inference when it has none."""
+    schema = _read_sidecar(data_dir)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(data_dir)
 
 
 class Catalog:
@@ -52,10 +141,7 @@ class Catalog:
             raise ValueError(
                 f"table {table!r} is snapshot-versioned — use write_snapshot()"
             )
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(table))
+        _write_parquet(df, self.path(table), mode, partition_by)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         if self.fmt == "iceberg":  # pragma: no cover
@@ -66,7 +152,7 @@ class Catalog:
         # pre-migration root files
         if self._snapshot_manifest(table)["versions"]:
             return self.read_snapshot(spark, table)
-        return spark.read.parquet(self.path(table))
+        return _scan(spark, self.path(table))
 
     def exists(self, table: str) -> bool:
         return os.path.exists(self.path(table)) or os.path.exists(self._manifest_path(table))
@@ -87,9 +173,11 @@ class Catalog:
         bucket_col: str = "docid",
         n_buckets: int = 32,
         run_id: str = "run0",
-    ) -> None:
-        """Write df partitioned by pmod(xxhash64(bucket_col), n_buckets),
-        skipping buckets already in the manifest (resume)."""
+    ) -> int:
+        """Append df's rows as one flat file set with a
+        ``bucket = pmod(xxhash64(bucket_col), n_buckets)`` column, skipping
+        buckets already in the manifest (resume). Returns the number of
+        rows written, counted by ``observe`` on the write itself."""
         if self._snapshot_manifest(table)["versions"]:
             # appending into the root of a versioned table would be
             # invisible to read() (which serves _vN) while the resume
@@ -99,13 +187,28 @@ class Catalog:
                 "appends to the plain layout; use a different table or "
                 "write_snapshot()"
             )
+        base = self.path(table)
+        if os.path.isdir(base) and any(d.startswith("bucket=") for d in os.listdir(base)):
+            # a flat append next to bucket= dirs reads back as the
+            # partitioned rows only (partition discovery ignores the root
+            # files): silent data loss
+            raise ValueError(
+                f"table {table!r} holds the bucket=-partitioned checkpoint "
+                "layout of an older tree — rewrite it flat or checkpoint "
+                "to a new table"
+            )
         done = set(self.completed_buckets(table))
-        bucketed = df.withColumn(
+        if done >= set(range(n_buckets)):
+            return 0
+        bucketed = df.withColumn("run_id", F.lit(run_id)).withColumn(
             "bucket", F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(n_buckets)).cast("int")
-        ).withColumn("run_id", F.lit(run_id))
+        )
         if done:
             bucketed = bucketed.filter(~F.col("bucket").isin(sorted(done)))
-        bucketed.write.mode("append").partitionBy("bucket").parquet(self.path(table))
+        written = Observation()
+        _write_parquet(
+            bucketed.observe(written, F.count(F.lit(1)).alias("rows")), base, "append"
+        )
         now = time.time()
         mp = self._manifest_path(table)
         manifest = {"table": table, "n_buckets": n_buckets, "buckets": {}}
@@ -119,6 +222,7 @@ class Catalog:
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.replace(tmp, mp)
+        return written.get["rows"]
 
     def pending(self, df: DataFrame, table: str, bucket_col: str = "docid", n_buckets: int = 32) -> DataFrame:
         """Rows of df whose bucket is NOT yet completed (anti-join resume)."""
@@ -243,10 +347,9 @@ class Catalog:
                 if run_id in man.get("expired_run_ids", []):
                     return int(man["current"])
             v = int(man["current"]) + 1
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(os.path.join(self.path(table), f"_v{v}"))
+            _write_parquet(
+                df, os.path.join(self.path(table), f"_v{v}"), "overwrite", partition_by
+            )
             man["current"] = v
             man["versions"][str(v)] = {"written_at": time.time(), "run_id": run_id}
             sp = self._snapshot_manifest_path(table)
@@ -280,7 +383,7 @@ class Catalog:
         v = int(man["current"]) if version is None else int(version)
         if str(v) not in man["versions"]:
             raise ValueError(f"table {table!r} has no snapshot version {v}")
-        return spark.read.parquet(os.path.join(self.path(table), f"_v{v}"))
+        return _scan(spark, os.path.join(self.path(table), f"_v{v}"))
 
     def expire_snapshots(self, table: str, keep: int = 2) -> list[int]:
         """Drop all but the newest ``keep`` versions (the current one is
@@ -339,7 +442,8 @@ class Catalog:
 
         The small-file problem is the dominant operational failure of
         long-lived incremental tables at scale — every resume append adds
-        (tasks x buckets) files, and a 100 TB table with millions of
+        a file per write task (per task x bucket for a ``bucket=``
+        partitioned table), and a 100 TB table with millions of
         8 MB files spends more time in listing + open() than in IO.
         Compaction is value-neutral (read -> coalesce -> rewrite, no
         shuffle: coalesce only merges co-located splits), idempotent
@@ -369,6 +473,7 @@ class Catalog:
         if man["versions"]:
             base = os.path.join(base, f"_v{int(man['current'])}")
         parts = [d for d in sorted(os.listdir(base)) if d.startswith("bucket=")]
+        recorded = _read_sidecar(base)
         report: dict[str, tuple[int, int]] = {}
         for d in parts or [""]:
             pdir = os.path.join(base, d) if d else base
@@ -382,16 +487,20 @@ class Catalog:
             # invisible to Spark's file listing / partition discovery.
             # mergeSchema: a long-lived incremental table may carry schema
             # drift across appended files; inferring from one footer would
-            # silently drop later columns from the rewrite.
+            # silently drop later columns from the rewrite. A recorded
+            # schema means no drift (an append that drifts drops it).
             tmp = os.path.join(os.path.dirname(pdir), f"_compact_{table}_{d or 'root'}")
             old = tmp + ".old"
-            (
+            reader = (
                 spark.read.option("mergeSchema", "true")
-                .parquet(pdir)
-                .coalesce(n_out)
-                .write.mode("overwrite")
-                .parquet(tmp)
+                if recorded is None
+                else spark.read.schema(recorded)
             )
+            rewritten = reader.parquet(pdir).coalesce(n_out)
+            if d:
+                rewritten.write.mode("overwrite").parquet(tmp)
+            else:  # the root swap carries a sidecar true to the rewrite
+                _write_parquet(rewritten, tmp, "overwrite")
             # swap order narrows the unreadable window to two renames
             # (microseconds, vs spanning a whole rmtree): live dir aside,
             # rewrite into place, THEN delete. A crash at any point leaves

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from deepex_spark.operators.ann import (
     ivf_assign,
-    ivf_assign_vectorized,
     ivf_centroids,
     ivf_search,
 )
@@ -90,42 +89,6 @@ def test_ivf_index_partition_pruning(spark, emb, tmp_path):
     # pruned read returns exactly the two lists
     got = {r["centroid_id"] for r in probed.select("centroid_id").distinct().collect()}
     assert got <= {2, 5}
-
-
-def test_ivf_assign_vectorized_matches_expr_path(emb):
-    """The production (broadcast centroid matrix -> one matmul+argmax per
-    Arrow batch) assignment must produce IDENTICAL centroid ids to the
-    literal-expression path on real embeddings, and its plan must stay a
-    narrow projection: Arrow python stage, zero Exchange."""
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    cents = ivf_centroids(8, 64, 733)
-    a = {tuple(r) for r in ivf_assign(e, cents).select("vec_id", "centroid_id").collect()}
-    b = {
-        tuple(r)
-        for r in ivf_assign_vectorized(e, cents).select("vec_id", "centroid_id").collect()
-    }
-    assert a == b
-
-    plan = (
-        ivf_assign_vectorized(e, cents)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" in plan or "Python" in plan
-
-
-def test_ivf_search_large_k_uses_vectorized_path(emb):
-    """k_centroids * dim above the inline-literal cap must route through
-    the pandas assignment (no megaliteral expression) and still return
-    top-k rows."""
-    out = ivf_search(emb, F.col("vec_id") < 2, k_centroids=128, nprobe=128, topk=2)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan or "Python" in plan
-    rows = out.collect()
-    assert {r["query_id"] for r in rows} == {0, 1}
-    assert all(r["rnk"] <= 2 for r in rows)
 
 
 def test_ivf_assign_matches_numpy_argmax(spark):

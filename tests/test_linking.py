@@ -24,6 +24,68 @@ def test_lemma_rules():
     assert lemma("works") == "work"
 
 
+# every character Python's str.split() splits on: ASCII \s, the \x1c-\x1f
+# separators and the Unicode spaces
+_PY_SPACES = "".join(c for c in map(chr, range(0x3001)) if c.isspace())
+# words around each suffix rule's length guard, doubled stems included
+_GUARD_WORDS = [
+    "ies", "ties", "aies", "cities", "ches", "aches", "shes", "xes", "axes", "sses",
+    "zes", "ss", "us", "is", "as", "bus", "kiss", "this", "cats", "ing", "sing",
+    "bring", "going", "runing", "running", "ed", "bed", "feed", "stopped", "added",
+    "lled", "eed", "seeing", "aaing", "aaed", "doing", "s", "S", "WAS", "Cities",
+]
+
+
+def _lemmatize_spark(spark, texts):
+    from pyspark.sql import functions as F
+
+    from deepex_spark.operators.canonicalize import lemmatize_col
+
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, s string")
+    out = df.select("i", lemmatize_col(F.col("s")).alias("l")).collect()
+    return [r.l for r in sorted(out)]
+
+
+def _lemmatize_py(text):
+    return None if text is None else " ".join(lemma(w) for w in text.split())
+
+
+def test_lemmatize_col_matches_lemma_on_edge_cases(spark):
+    from deepex_spark.nlp.keywords import _LEMMA_EXCEPTIONS
+
+    words = [*_LEMMA_EXCEPTIONS, *(w.upper() for w in _LEMMA_EXCEPTIONS), *_GUARD_WORDS]
+    texts = [None, "", " ", "\x1c\x1d", _PY_SPACES, "was\x1fborn\u3000in\xa0", *words,
+             " ".join(words), _PY_SPACES.join(words)]
+    assert _lemmatize_spark(spark, texts) == [_lemmatize_py(t) for t in texts]
+
+
+def test_lemmatize_col_matches_lemma_property(spark):
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from deepex_spark.nlp.keywords import _LEMMA_EXCEPTIONS
+
+    word = st.one_of(
+        st.sampled_from(sorted(_LEMMA_EXCEPTIONS)),
+        st.sampled_from(_GUARD_WORDS),
+        st.builds(
+            lambda stem, suffix: stem + suffix,
+            st.text("abdegilnorstuyzBEGSÉé", max_size=5),
+            st.sampled_from(["", "s", "ss", "us", "is", "ies", "ches", "shes", "xes",
+                             "sses", "zes", "ing", "ed", "tting", "lled"]),
+        ),
+    )
+    text = st.lists(st.one_of(word, st.text(_PY_SPACES, min_size=1, max_size=2)),
+                    max_size=6).map("".join)
+
+    @settings(max_examples=20, deadline=None)
+    @given(st.lists(st.one_of(st.none(), text), min_size=1, max_size=60))
+    def run(texts):
+        assert _lemmatize_spark(spark, texts) == [_lemmatize_py(t) for t in texts]
+
+    run()
+
+
 def test_lemmatize_span_backmap():
     text = "Obama was running"
     lem_text, ns2os = lemmatize_with_spans(text)

@@ -50,17 +50,18 @@ def test_html_to_text():
 
 
 def test_spark_normalize_chain_byte_identical(spark):
-    from pyspark.sql import functions as F
-
-    from deepex_spark.functions.text import blank_parens
+    """The pipeline's normalize chain (``prepare_docs``, the front end's one
+    Python node) blanks parens byte-identically to the reference."""
+    from deepex_spark.functions.sentencize import prepare_docs
 
     texts = [
         "Obama (the president) was born in Hawaii.",
         "Nested ((double)) and (single).",
         "naïve café ((x)) test.",
     ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = [r[0] for r in df.select(blank_parens(F.col("text"))).collect()]
+    df = spark.createDataFrame(list(enumerate(texts)), "docid int, text string")
+    docs = prepare_docs(df, "docid", "text", normalize=True).orderBy("docid")
+    got = [r.text for r in docs.collect()]
     assert got == [reference_blanking(t) for t in texts]
 
 
