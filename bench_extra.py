@@ -1,14 +1,15 @@
 """Round-6 auxiliary measurements (bench.py is FROZEN for the driver;
-everything exploratory lives here — guide §1.4 noop-sink isolation).
+everything exploratory lives here).
 
 Modes:
-  --stages   per-stage noop isolation of pipeline_triples at $SPARK_GRAFT_SF_DIR
   --ivf      DataFrame-build / plan / execute split for ann_ivf_topk
   --ktruss   per-round peel profile (edge counts + wall) for kg_ktruss's graph
   --local N  single-process kernel wall over N sf0.1 docs (native vs python)
 
 Each mode prints one JSON line. Used for the numbers quoted in
 OPTIMIZATION_r06.md; none of this is on the driver's measurement path.
+Per-stage timings of the crawl pipeline come from
+``python kgbench/run.py --workload crawl_build --trace 1``.
 """
 
 from __future__ import annotations
@@ -32,44 +33,6 @@ def _session():
     )
     spark.range(1000).selectExpr("sum(id)").collect()
     return spark
-
-
-def _noop(df) -> float:
-    t0 = time.time()
-    df.write.format("noop").mode("overwrite").save()
-    return round(time.time() - t0, 3)
-
-
-def run_stages() -> dict:
-    from deepex_spark.config import DeepExConfig
-    from deepex_spark.functions.sentencize import sentencize
-    from deepex_spark.operators.distill import distill_project, with_doc_rank
-    from deepex_spark.operators.extract import extract_candidates
-    from deepex_spark.operators.rerank import rerank_triples
-    from deepex_spark.pipeline import normalize_pages
-    from deepex_spark.sources.pages import read_documents
-
-    spark = _session()
-    cfg = DeepExConfig.small()
-    docs = read_documents(spark, SF_DIR).withColumnRenamed("docid", "url")
-    out = {}
-    spark.sparkContext.setJobDescription("stage: normalize")
-    norm = normalize_pages(docs, cfg)
-    out["normalize"] = _noop(norm)
-    spark.sparkContext.setJobDescription("stage: +sentencize")
-    sents = sentencize(norm, mode=cfg.sentencize_offsets, scan_max_len=cfg.sentencize_scan_max_len)
-    out["sentencize"] = _noop(sents)
-    spark.sparkContext.setJobDescription("stage: +extract (fused kernel)")
-    cand = extract_candidates(sents, cfg)
-    out["extract"] = _noop(cand)
-    spark.sparkContext.setJobDescription("stage: +distill_project")
-    proj = distill_project(cand, cfg)
-    out["distill_project"] = _noop(proj)
-    spark.sparkContext.setJobDescription("stage: +rerank window")
-    out["rerank_window"] = _noop(rerank_triples(with_doc_rank(proj), cfg))
-    spark.stop()
-    return {"metric": "pipeline_stage_noop_sec", "value": out["rerank_window"],
-            "unit": "sec", "queries": out, "sf_dir": SF_DIR, "cpus": int(CPUS)}
 
 
 def run_ivf() -> dict:
@@ -193,9 +156,7 @@ def run_local(n_docs: int = 300) -> dict:
 
 
 if __name__ == "__main__":
-    if "--stages" in sys.argv:
-        print(json.dumps(run_stages()))
-    elif "--ivf" in sys.argv:
+    if "--ivf" in sys.argv:
         print(json.dumps(run_ivf()))
     elif "--ktruss" in sys.argv:
         print(json.dumps(run_ktruss_profile()))
@@ -204,4 +165,4 @@ if __name__ == "__main__":
         n = int(sys.argv[i + 1]) if len(sys.argv) > i + 1 else 300
         print(json.dumps(run_local(n)))
     else:
-        print(json.dumps(run_stages()))
+        sys.exit(__doc__)

@@ -97,14 +97,17 @@ _NESTED_COLUMNS = [f.name for f in NESTED_SCHEMA.fields]
 
 
 # Plan-estimated sentence bytes one kernel task carries. Every Python task
-# pays a fixed worker set-up of ~0.27 s CPU, whatever its row count: the
-# worker's ``setup_spark_files`` calls ``importlib.invalidate_caches()``,
-# which makes each of its zipimporters re-read the pyspark.zip directory
-# (CPython 3.11, PySpark 4.1). The kernel (DeepExConfig.task(), native
-# beam walks, rerank distances) works through ~17 KB/s of the optimizer's
-# size estimate per core: 1,769 crawl sentences, estimated at 20,628 B, in
-# 1.2 s single-threaded (4-core x86 host). 64 KiB is ~3.8 s of kernel work
-# per task, so the set-up stays under a tenth of it.
+# pays a fixed worker set-up whatever its row count: 2-3 ms CPU on a worker
+# forked from ``deepex_spark.pyworker`` (local masters), 0.3-0.45 s under
+# Spark's own daemon, whose workers keep pyspark.zip, the py4j zip and the
+# spark-core jar on their path, so each task's ``importlib.invalidate_caches()``
+# re-reads all three archives (CPython 3.11, PySpark 4.1; trivial 16-task
+# pandas-UDF jobs, 4-core x86 host). The kernel (DeepExConfig.task(),
+# native beam walks, rerank distances) works through ~17 KB/s of the
+# optimizer's size estimate per core: 1,769 crawl sentences, estimated at
+# 20,628 B, in 1.2 s single-threaded. 64 KiB is ~3.8 s of kernel work per
+# task, so even the 0.45 s set-up stays under a tenth of it; it was sized
+# before workers started warm.
 _KERNEL_BYTES_PER_TASK = 64 << 10
 
 

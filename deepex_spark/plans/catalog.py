@@ -525,6 +525,7 @@ class Catalog:
 
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
 
         table = pa.table(
             [[run_id], [stage], [rows], [float(wall_s)], [time.time()]],
@@ -534,8 +535,11 @@ class Catalog:
         )
         out = self.path("metrics")
         os.makedirs(out, exist_ok=True)
+        first = not _has_data(out)
         name = f"part-{uuid.uuid4()}.parquet"
         # readers skip "_"-prefixed files, so the rename publishes the row whole
         tmp = os.path.join(out, "_" + name)
         pq.write_table(table, tmp, store_schema=False)
         os.replace(tmp, os.path.join(out, name))
+        if first:  # the schema is fixed: record it once, as the other writes do
+            _write_sidecar(from_arrow_schema(table.schema), out)

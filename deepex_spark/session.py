@@ -26,6 +26,22 @@ def iceberg_conf(warehouse_dir: str, catalog_name: str = "local") -> dict:
     }
 
 
+def _warm_daemon_applies(master: str) -> bool:
+    """Whether Python workers can run ``deepex_spark.pyworker`` as their
+    daemon: the master is local (the workers start from this JVM, with
+    its cwd and environment) and ``deepex_spark`` was imported from a
+    directory that is the cwd or on ``PYTHONPATH``. A package shipped with
+    ``--py-files`` reaches workers only per task, after the daemon has
+    started, so those sessions keep Spark's own daemon."""
+    if not (master == "local" or master.startswith("local[")):
+        return False
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if not os.path.isdir(root):
+        return False
+    paths = [os.getcwd()] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    return any(os.path.abspath(p) == root for p in paths)
+
+
 def build_session(
     app_name: str = "deepex-spark",
     master: str | None = None,
@@ -70,6 +86,8 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if _warm_daemon_applies(master):
+        b = b.config("spark.python.daemon.module", "deepex_spark.pyworker")
     if iceberg_jars:
         b = b.config("spark.jars.packages", ICEBERG_PACKAGE)
     for k, v in (extra_conf or {}).items():

@@ -18,6 +18,8 @@ carry ~50x average length) for the AQE skew path (FIXTURES.md F1/F10).
 from __future__ import annotations
 
 import datetime as _dt
+import json
+import os
 import random
 
 from pyspark.sql import DataFrame, SparkSession
@@ -124,11 +126,55 @@ def synth_pages(
     return df
 
 
+def _first_data_file(path: str) -> str | None:
+    if os.path.isfile(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        data = sorted(f for f in files if not f.startswith(("_", ".")))
+        if data:
+            return os.path.join(root, data[0])
+    return None
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The read schema of a local parquet input, from one file's footer
+    read in this process, as Spark's inference reads it: the schema Spark
+    recorded in the footer, or else the parquet schema converted. None
+    for a non-local path, or where the conversion could differ from
+    Spark's (INT96 timestamps outside a Spark-written file)."""
+    if "://" in path and not path.startswith("file://"):
+        return None
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    first = _first_data_file(path.removeprefix("file://"))
+    if first is None:
+        return None
+    # an unreadable footer or a type without a conversion: inference decides
+    try:
+        meta = pq.read_metadata(first)
+        recorded = (meta.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+        if recorded is not None:
+            return StructType.fromJson(json.loads(recorded))
+        if any(meta.schema.column(i).physical_type == "INT96" for i in range(meta.num_columns)):
+            return None
+        return from_arrow_schema(meta.schema.to_arrow_schema(), prefer_timestamp_ntz=True)
+    except (OSError, ValueError, TypeError, KeyError, NotImplementedError):
+        return None
+
+
 def read_pages(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
+    """Pages at ``path`` with the input's own columns: the front end
+    branches on which of ``text``/``html`` it has. A local parquet input
+    is read with its footer's schema, so no schema-inference job runs."""
     if fmt == "iceberg":
         return spark.read.format("iceberg").load(path)
     if fmt in ("json", "jsonl"):
         return read_pages_jsonl(spark, path)
+    schema = _footer_schema(path) if fmt == "parquet" else None
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
     return spark.read.format(fmt).load(path)
 
 

@@ -1,6 +1,7 @@
 """Catalog I/O at the cost of a flat write and a plain scan
 (plans/catalog.py): recorded read schemas, the flat checkpoint and its
-observed row count."""
+observed row count; page inputs read with their footer's schema
+(sources/pages.py)."""
 
 import os
 
@@ -212,3 +213,43 @@ def test_checkpoint_refuses_legacy_partitioned_layout(spark, tmp_path):
     with pytest.raises(ValueError, match="bucket=-partitioned"):
         cat.checkpoint(df, "t", n_buckets=4)
     assert spark.read.parquet(cat.path("t")).count() == 10
+
+
+def test_metrics_read_starts_no_job(spark, tmp_path):
+    cat = Catalog(str(tmp_path))
+    cat.log_metric(spark, "triples", 7, 1.5, "r1")
+    cat.log_metric(spark, "edges", 3, 0.5, "r1")
+    df, jobs = _jobs(spark, lambda: cat.read(spark, "metrics"))
+    assert jobs == []
+    assert df.schema == spark.read.parquet(cat.path("metrics")).schema
+    assert sorted((r.stage, r.rows) for r in df.collect()) == [("edges", 3), ("triples", 7)]
+
+
+@pytest.mark.parametrize("columns", [("text", "html"), ("text",), ("html",)])
+def test_read_pages_uses_the_footer_schema(spark, tmp_path, columns):
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from deepex_spark.sources.pages import read_pages, synth_pages
+
+    keep = ["url", "warc_ts", *columns, "lang"]
+    by_spark = str(tmp_path / "spark")
+    synth_pages(spark, n_docs=8, seed=5).select(*keep).write.parquet(by_spark)
+    # written outside Spark, as a crawler's export: no Spark schema in the
+    # footer, a naive (TIMESTAMP_NTZ) warc_ts
+    by_arrow = tmp_path / "arrow"
+    by_arrow.mkdir()
+    pq.write_table(pa.table({
+        "url": ["u0", "u1"],
+        "warc_ts": pa.array([dt.datetime(2024, 1, 1)] * 2, pa.timestamp("us")),
+        **({"text": ["A b.", None]} if "text" in columns else {}),
+        **({"html": pa.array([b"<p>A b.</p>", None])} if "html" in columns else {}),
+        "lang": ["en", "en"],
+    }), str(by_arrow / "part-0.parquet"))
+    for path in (by_spark, str(by_arrow)):
+        df, jobs = _jobs(spark, lambda: read_pages(spark, path))
+        assert jobs == [], path
+        assert df.schema == spark.read.parquet(path).schema, path
+        assert df.columns == keep
