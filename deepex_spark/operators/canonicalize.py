@@ -10,93 +10,91 @@ partition-layout-dependent).
 
 Everything is JVM-side column algebra, lemmatization included: the
 per-word exception table and suffix rules of ``nlp/keywords.py::lemma``
-are one ``transform`` over the split words.
+are one ``transform`` over the split words. The expressions are written
+as SQL text for ``F.expr``: one parse on the driver, where building them
+from Column calls took ~600 py4j round trips per plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_DETERMINERS = ("the ", "a ", "an ", "this ", "that ", "these ", "those ")
-
 
 # Python's str.split() whitespace: ASCII \s plus the four separators
 # \x1c-\x1f and the Unicode spaces (Java's \s matches ASCII only)
 _PY_WHITESPACE = r"[\s\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]+"
 
 
-def _lemma_expr(w: Column) -> Column:
-    """``keywords.lemma`` of one lowercase word as a column expression:
-    the exception table, then the same suffix rules in the same order."""
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+_WS_RUN = _sql_str(r"\s+")
+_NON_ASCII_RUN = _sql_str(r"[^\x00-\x7F]+")
+
+
+def _lemma_sql(w: str) -> str:
+    """``keywords.lemma`` of the lowercase word ``w`` (SQL text): the
+    exception table, then the same suffix rules in the same order."""
     from deepex_spark.nlp.keywords import _LEMMA_EXCEPTIONS
 
-    exceptions = F.create_map(*[F.lit(x) for kv in _LEMMA_EXCEPTIONS.items() for x in kv])
-    n = F.length(w)
+    exceptions = ", ".join(_sql_str(x) for kv in _LEMMA_EXCEPTIONS.items() for x in kv)
+    n = f"length({w})"
 
-    def drop(k: int) -> Column:
-        return w.substr(F.lit(1), n - k)
+    def drop(k: int) -> str:
+        return f"substr({w}, 1, {n} - {k})"
 
-    def undouble(stem: Column) -> Column:  # running -> run, stopped -> stop
-        return F.when(
-            (F.length(stem) > 2) & (stem.substr(-1, 1) == stem.substr(-2, 1)),
-            stem.substr(F.lit(1), F.length(stem) - 1),
-        ).otherwise(stem)
+    def undouble(stem: str) -> str:  # running -> run, stopped -> stop
+        return (f"CASE WHEN length({stem}) > 2 AND substr({stem}, -1, 1) = substr({stem}, -2, 1)"
+                f" THEN substr({stem}, 1, length({stem}) - 1) ELSE {stem} END")
 
-    def ends(*suffixes: str) -> Column:
-        hit = w.endswith(suffixes[0])
-        for x in suffixes[1:]:
-            hit = hit | w.endswith(x)
-        return hit
+    def ends(*suffixes: str) -> str:
+        return "(" + " OR ".join(f"endswith({w}, {_sql_str(x)})" for x in suffixes) + ")"
 
-    return F.coalesce(
-        exceptions[w],
-        F.when((n > 4) & ends("ies"), F.concat(drop(3), F.lit("y")))
-        .when((n > 3) & ends("ches", "shes", "xes", "sses", "zes"), drop(2))
-        .when((n > 3) & ends("s") & ~ends("ss", "us", "is"), drop(1))
-        .when((n > 4) & ends("ing"), undouble(drop(3)))
-        .when((n > 3) & ends("ed"), undouble(drop(2)))
-        .otherwise(w),
+    return (
+        f"coalesce(map({exceptions})[{w}], CASE"
+        f" WHEN {n} > 4 AND {ends('ies')} THEN concat({drop(3)}, 'y')"
+        f" WHEN {n} > 3 AND {ends('ches', 'shes', 'xes', 'sses', 'zes')} THEN {drop(2)}"
+        f" WHEN {n} > 3 AND {ends('s')} AND NOT {ends('ss', 'us', 'is')} THEN {drop(1)}"
+        f" WHEN {n} > 4 AND {ends('ing')} THEN {undouble(drop(3))}"
+        f" WHEN {n} > 3 AND {ends('ed')} THEN {undouble(drop(2))}"
+        f" ELSE {w} END)"
     )
 
 
-def lemmatize_col(col: Column) -> Column:
-    """Per-word ``keywords.lemma`` of a string column, words split as
-    Python's ``str.split()`` splits them and joined by single spaces; null
-    stays null. JVM column algebra: no Python worker."""
-    words = F.filter(F.split(F.lower(col), _PY_WHITESPACE), lambda w: w != "")
-    return F.array_join(F.transform(words, _lemma_expr), " ")
+def lemmatize_sql(expr: str) -> str:
+    """Per-word ``keywords.lemma`` of the string SQL expression ``expr``,
+    words split as Python's ``str.split()`` splits them and joined by
+    single spaces; null stays null. JVM-side: no Python worker."""
+    words = f"filter(split(lower({expr}), {_sql_str(_PY_WHITESPACE)}), x -> x != '')"
+    return f"array_join(transform({words}, w -> {_lemma_sql('w')}), ' ')"
 
 
-def norm_entity_col(col: Column) -> Column:
+def norm_entity_sql(expr: str) -> str:
     """lowercase, collapse whitespace, strip one leading determiner."""
-    return F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(col), r"\s+", " "),
-            r"^(the|a|an|this|that|these|those) ",
-            "",
-        )
-    )
+    collapsed = f"regexp_replace(lower({expr}), {_WS_RUN}, ' ')"
+    return f"trim(regexp_replace({collapsed}, '^(the|a|an|this|that|these|those) ', ''))"
+
+
+def _pred_norm_sql(expr: str) -> str:
+    """lowercase, non-ASCII scrub, whitespace collapse."""
+    ascii_only = f"regexp_replace(lower({expr}), {_NON_ASCII_RUN}, ' ')"
+    return f"trim(regexp_replace({ascii_only}, {_WS_RUN}, ' '))"
 
 
 def canonicalize_triples(triples: DataFrame) -> DataFrame:
-    """Adds subj_canon / obj_canon / pred_canon + stable 64-bit ids."""
-    ent_norm = norm_entity_col
-    pred_norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(F.col("rel")), r"[^\x00-\x7F]+", " "), r"\s+", " "
-        )
-    )
-    out = (
-        triples.withColumn("subj_canon", ent_norm(F.col("subj_entity") if "subj_entity" in triples.columns else F.col("subj")))
-        .withColumn("obj_canon", ent_norm(F.col("obj_entity") if "obj_entity" in triples.columns else F.col("obj")))
-        .withColumn("pred_canon", lemmatize_col(pred_norm))
-    )
-    return (
-        out.withColumn("subj_id", F.xxhash64("subj_canon"))
-        .withColumn("obj_id", F.xxhash64("obj_canon"))
-        .withColumn("pred_id", F.xxhash64("pred_canon"))
-    )
+    """Adds subj_canon / obj_canon / pred_canon + stable 64-bit ids, in two
+    projections."""
+    cols = set(triples.columns)
+    canon = {
+        f"{side}_canon": F.expr(norm_entity_sql(
+            f"`{side}_entity`" if f"{side}_entity" in cols else f"`{side}`"))
+        for side in ("subj", "obj")
+    }
+    canon["pred_canon"] = F.expr(lemmatize_sql(_pred_norm_sql("`rel`")))
+    ids = {f"{part}_id": F.expr(f"xxhash64({part}_canon)") for part in ("subj", "obj", "pred")}
+    return triples.withColumns(canon).withColumns(ids)
 
 
 def resolve_entities(

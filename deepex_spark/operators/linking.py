@@ -154,28 +154,28 @@ def link_triples(
     broadcast: ``join(broadcast(alias_df))`` — no shuffle, skew-immune.
     salted:    explicit salted shuffle join (dictionary too big to ship).
     """
-    alias_df = alias_df.select(
-        F.lower(F.trim(F.col("alias"))).alias("alias"), "canonical"
-    ).dropDuplicates(["alias"])
+    dim = alias_df.select(
+        F.lower(F.trim(F.col("alias"))).alias("_alias"), F.col("canonical").alias("_canonical")
+    )
+    if strategy == "broadcast":
+        # the dimension ships whole anyway: dedupe it in one task, which
+        # needs no exchange (and no job of its own under AQE)
+        dim = dim.coalesce(1)
+    dim = dim.dropDuplicates(["_alias"])
 
     out = triples
     for side in ("subj", "obj"):
-        keyed = out.withColumn(f"_{side}_key", F.lower(F.trim(F.col(side))))
-        dim = alias_df.withColumnRenamed("alias", f"_{side}_key").withColumnRenamed(
-            "canonical", f"{side}_canonical"
-        )
+        keyed = out.withColumn("_alias", F.lower(F.trim(F.col(side))))
         if strategy == "broadcast":
-            joined = keyed.join(F.broadcast(dim), f"_{side}_key", "left")
+            joined = keyed.join(F.broadcast(dim), "_alias", "left")
         elif strategy == "salted":
-            joined = salted_equi_join(keyed, dim, f"_{side}_key", buckets=salt_buckets, how="left")
+            joined = salted_equi_join(keyed, dim, "_alias", buckets=salt_buckets, how="left")
         else:
             raise ValueError(strategy)
-        out = joined.withColumn(
-            f"{side}_entity",
-            F.coalesce(F.col(f"{side}_canonical"), F.col(f"_{side}_key")),
-        ).withColumn(
-            f"{side}_linked", F.col(f"{side}_canonical").isNotNull()
-        ).drop(f"_{side}_key", f"{side}_canonical")
+        out = joined.withColumns({
+            f"{side}_entity": F.coalesce("_canonical", "_alias"),
+            f"{side}_linked": F.col("_canonical").isNotNull(),
+        }).drop("_alias", "_canonical")
     return out
 
 

@@ -97,7 +97,7 @@ def build_knowledge_graph(
     import time as _time
 
     from deepex_spark.operators.canonicalize import canonicalize_triples
-    from deepex_spark.operators.graph import build_edges, build_vertices
+    from deepex_spark.operators.graph import build_edges, build_vertices, write_graph
     from deepex_spark.operators.linking import link_triples
 
     spark = pages.sparkSession
@@ -119,11 +119,11 @@ def build_knowledge_graph(
     if catalog is None:
         return triples, build_vertices(canon, cfg.run_id), build_edges(canon, cfg.run_id)
     # both writes read canon: run link and canonicalize once for the two,
-    # and drop the cache before returning so none outlives the call
+    # and drop the cache once both have ended so none outlives the call
     canon = canon.persist()
     try:
-        catalog.write(build_vertices(canon, cfg.run_id), "vertices")
-        catalog.write(build_edges(canon, cfg.run_id), "edges")
+        write_graph(catalog, build_vertices(canon, cfg.run_id),
+                    build_edges(canon, cfg.run_id), run_id=cfg.run_id)
     finally:
         canon.unpersist()
     return triples, catalog.read(spark, "vertices"), catalog.read(spark, "edges")

@@ -2654,11 +2654,11 @@ def kg_assortativity(spark, sf_dir):
     """,
 )
 def canonicalize_entities(spark, sf_dir):
-    from deepex_spark.operators.canonicalize import norm_entity_col
+    from deepex_spark.operators.canonicalize import norm_entity_sql
 
     c = load(spark, sf_dir, "customer")
     return c.groupBy(
-        norm_entity_col(F.concat_ws(" ", "c_mktsegment", "c_name")).alias("canon")
+        F.expr(norm_entity_sql("concat_ws(' ', c_mktsegment, c_name)")).alias("canon")
     ).agg(F.count("*").alias("n"))
 
 

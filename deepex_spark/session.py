@@ -85,6 +85,11 @@ def build_session(
         .config("spark.buffer.size", "1048576")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark 4 captures the Python call site of every Column and
+        # DataFrame call for error messages, ~5 py4j round trips each: half
+        # of a crawl build's driver round trips. Pass it "true" in
+        # extra_conf to get the call sites back.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if _warm_daemon_applies(master):
         b = b.config("spark.python.daemon.module", "deepex_spark.pyworker")

@@ -134,6 +134,59 @@ def test_maintain_job_idempotent_per_run_id(spark, tmp_path, canon_halves):
     assert live._snapshot_manifest("vertices")["current"] > r1["vertices"][0]
 
 
+def test_materialize_graph_writes_both_tables_in_callers_job_group(
+    spark, tmp_path, canon_halves, run_in_job_group
+):
+    """materialize_graph writes vertices and edges side by side
+    (write_graph): every job of both writes runs in the caller's job
+    group, both tables equal the plain builds, and on a snapshot-versioned
+    catalog a rebuild publishes a new snapshot of each table."""
+    from deepex_spark.operators.graph import (
+        materialize_graph,
+        with_edge_bucket,
+        with_vertex_bucket,
+    )
+    from deepex_spark.plans.catalog import Catalog
+
+    full, a, _b = canon_halves
+    cat = Catalog(str(tmp_path / "kg"))
+    _, grouped, ungrouped = run_in_job_group(lambda: materialize_graph(full, cat, run_id="r1"))
+    assert grouped and not ungrouped
+    assert _vrows(cat.read(spark, "vertices")) == _vrows(build_vertices(full))
+    assert _erows(cat.read(spark, "edges")) == _erows(build_edges(full))
+
+    versioned = Catalog(str(tmp_path / "versioned"))
+    versioned.write_snapshot(with_vertex_bucket(build_vertices(a)), "vertices",
+                             partition_by=["bucket"], run_id="m1")
+    versioned.write_snapshot(with_edge_bucket(build_edges(a)), "edges",
+                             partition_by=["bucket"], run_id="m1")
+    materialize_graph(full, versioned, run_id="rebuild")
+    for table in ("vertices", "edges"):
+        assert versioned.version_of_run(table, "rebuild") == 2
+    assert _vrows(versioned.read(spark, "vertices")) == _vrows(build_vertices(full))
+    assert _erows(versioned.read(spark, "edges")) == _erows(build_edges(full))
+
+
+def test_write_graph_raises_after_both_writes_end(spark, tmp_path, canon_halves):
+    """A failing table write re-raises out of write_graph, but only once
+    the other table's write has ended: the edges land in full."""
+    from deepex_spark.operators.graph import materialize_graph
+    from deepex_spark.plans.catalog import Catalog
+
+    class FailingVertices(Catalog):
+        def write(self, df, table, **kw):
+            if table == "vertices":
+                raise RuntimeError("vertices write failed")
+            super().write(df, table, **kw)
+
+    full = canon_halves[0]
+    cat = FailingVertices(str(tmp_path / "kg"))
+    with pytest.raises(RuntimeError, match="vertices write failed"):
+        materialize_graph(full, cat)
+    assert not cat.exists("vertices")
+    assert _erows(cat.read(spark, "edges")) == _erows(build_edges(full))
+
+
 # --- right-to-be-forgotten + snapshot audit diff -------------------------
 
 _TRIP_COLS = ["subj_id", "obj_id", "pred_canon", "score", "docid"]

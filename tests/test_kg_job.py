@@ -6,7 +6,7 @@ import pytest
 from deepex_spark.config import DeepExConfig
 
 
-def test_build_kg_with_catalog_and_resume(spark, tmp_path):
+def test_build_kg_with_catalog_and_resume(spark, tmp_path, run_in_job_group):
     from deepex_spark.operators.linking import alias_entity_table
     from deepex_spark.pipeline import build_knowledge_graph
     from deepex_spark.plans.catalog import Catalog
@@ -21,7 +21,11 @@ def test_build_kg_with_catalog_and_resume(spark, tmp_path):
          "president": "Barack Obama"},
     )
     cached_before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-    triples, vertices, edges = build_knowledge_graph(pages, cfg, alias_df=alias_df, catalog=cat)
+    (triples, vertices, edges), grouped, ungrouped = run_in_job_group(
+        lambda: build_knowledge_graph(pages, cfg, alias_df=alias_df, catalog=cat))
+    # every job of the build, both graph writes' included, runs in the
+    # caller's job group: the writes' threads inherit it
+    assert grouped and not ungrouped
     # the build caches canon for its two writes and drops it before returning
     # (subset: the context cleaner may drop an earlier test's cache meanwhile)
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= cached_before
@@ -43,6 +47,30 @@ def test_build_kg_with_catalog_and_resume(spark, tmp_path):
     canon = {r["canonical"] for r in v.collect()}
     assert "barack obama" in canon
     assert "president" not in canon  # linked away before canonicalization
+
+
+def test_build_kg_failing_graph_write_raises_and_unpersists(spark, tmp_path):
+    """A graph write that fails raises out of build_knowledge_graph, after
+    the other write has ended, and the build still drops its canon cache."""
+    from deepex_spark.pipeline import build_knowledge_graph
+    from deepex_spark.plans.catalog import Catalog
+    from deepex_spark.sources.pages import synth_pages
+
+    class FailingEdges(Catalog):
+        def write(self, df, table, **kw):
+            if table == "edges":
+                raise RuntimeError("edges write failed")
+            super().write(df, table, **kw)
+
+    cat = FailingEdges(str(tmp_path / "kg"))
+    pages = synth_pages(spark, n_docs=4, seed=11)
+    cached_before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    with pytest.raises(RuntimeError, match="edges write failed"):
+        build_knowledge_graph(pages, DeepExConfig.task(dist_const=2), catalog=cat)
+    # the vertices write ran to its end over the cached canon...
+    assert cat.read(spark, "vertices").count() > 0
+    # ...and the cache is gone (subset: see the test above)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= cached_before
 
 
 def test_spark_submit_job_cli(spark, tmp_path):

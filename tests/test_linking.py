@@ -39,10 +39,10 @@ _GUARD_WORDS = [
 def _lemmatize_spark(spark, texts):
     from pyspark.sql import functions as F
 
-    from deepex_spark.operators.canonicalize import lemmatize_col
+    from deepex_spark.operators.canonicalize import lemmatize_sql
 
     df = spark.createDataFrame(list(enumerate(texts)), "i int, s string")
-    out = df.select("i", lemmatize_col(F.col("s")).alias("l")).collect()
+    out = df.select("i", F.expr(lemmatize_sql("s")).alias("l")).collect()
     return [r.l for r in sorted(out)]
 
 
@@ -136,6 +136,30 @@ def test_link_triples_broadcast_and_salted(spark):
         assert out["The President"]["subj_linked"] is True
         assert out["Barack Obama"]["obj_entity"] == "hawaii"  # NIL fallback
         assert out["Barack Obama"]["obj_linked"] is False
+
+
+def test_link_triples_colliding_aliases_resolve_to_the_first(spark):
+    """Aliases equal after lower(trim()) resolve to the first one in the
+    alias table's order, across its partitions, with either strategy."""
+    from deepex_spark.operators.linking import alias_entity_table, link_triples
+
+    aliases = {"POTUS": "first"}
+    aliases.update({f"filler {i}": f"F{i}" for i in range(200)})
+    aliases[" potus"] = "second"
+    aliases.update({f"more {i}": f"M{i}" for i in range(200)})
+    aliases["Potus\t"] = "third"
+    alias = alias_entity_table(spark, aliases)
+    assert alias.rdd.getNumPartitions() > 1
+    tri = spark.createDataFrame(
+        [("d1", " POTUS", "r", "potus ", 0.9), ("d2", "Potus", "r", "nobody", 0.1)],
+        "docid string, subj string, rel string, obj string, score double",
+    )
+    for strategy in ("broadcast", "salted"):
+        rows = link_triples(tri, alias, strategy=strategy).collect()
+        assert {r["subj_entity"] for r in rows} == {"first"}
+        assert sorted((r["obj_entity"], r["obj_linked"]) for r in rows) == [
+            ("first", True), ("nobody", False)
+        ]
 
 
 def test_alias_entity_table_schema_and_empty(spark):

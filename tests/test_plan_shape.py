@@ -187,3 +187,18 @@ def test_front_end_is_one_python_node(spark):
         plan = extract_triples(pages, cfg)._jdf.queryExecution().executedPlan().toString()
         assert plan.count("ArrowEvalPython") == 1, plan
         assert plan.count("MapInPandas") == 1, plan
+
+
+def test_broadcast_link_plans_no_shuffle(spark):
+    """link_triples(strategy="broadcast") dedupes the alias dimension in the
+    one task that builds its broadcast: the plan has no shuffle exchange."""
+    from deepex_spark.operators.linking import alias_entity_table, link_triples
+
+    tri = spark.createDataFrame(
+        [("d1", "Barack Obama", "was born in", "Hawaii", 0.9)],
+        "docid string, subj string, rel string, obj string, score double",
+    )
+    alias = alias_entity_table(spark, {f"alias {i}": f"E{i}" for i in range(100)})
+    plan = link_triples(tri, alias, strategy="broadcast")._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastExchange") >= 1, plan
+    assert plan.count("Exchange") == plan.count("BroadcastExchange"), plan

@@ -12,7 +12,12 @@ TRIPLES_SCHEMA = StructType(
 )
 
 
-def _run_phase(spark, src, out, chk, ttl_ms=None):
+def _run_phase(spark, src, out, chk, new_rows, ttl_ms=None):
+    """Run the dedup query over ``src`` until the ``new_rows`` input rows
+    written since the last phase have been read and their batches
+    committed, then stop it."""
+    import time
+
     from deepex_spark.streaming.stateful import dedup_new_triples
 
     stream = (
@@ -29,10 +34,17 @@ def _run_phase(spark, src, out, chk, ttl_ms=None):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
-    # with processing-time timers armed, availableNow may keep servicing
-    # timer batches past the data — stop explicitly so phases don't overlap
+    # with processing-time timers armed, availableNow keeps running no-data
+    # batches to service them and never ends by itself. A batch reports
+    # its progress after it commits, so stop once the reported input rows
+    # cover the new ones; stopping also keeps phases from overlapping.
+    deadline = time.monotonic() + 180
+    while q.isActive and time.monotonic() < deadline:
+        if sum(p["numInputRows"] for p in q.recentProgress) >= new_rows:
+            break
+        time.sleep(0.05)
     q.stop()
+    assert sum(p["numInputRows"] for p in q.recentProgress) == new_rows
 
 
 def test_stateful_dedup_across_batches_and_restarts(spark, tmp_path):
@@ -47,7 +59,7 @@ def test_stateful_dedup_across_batches_and_restarts(spark, tmp_path):
     b1 = [("d1", "A [SEP] r [SEP] B", 0.9), ("d1", "A [SEP] r [SEP] C", 0.8),
           ("d2", "X [SEP] r [SEP] Y", 0.7)]
     pd.DataFrame(b1, columns=cols).to_parquet(src / "f1.parquet", index=False)
-    _run_phase(spark, src, out, chk)
+    _run_phase(spark, src, out, chk, new_rows=3)
     got1 = {(r["docid"], r["triple_key"]) for r in spark.read.parquet(str(out)).collect()}
     assert got1 == {("d1", "A [SEP] r [SEP] B"), ("d1", "A [SEP] r [SEP] C"),
                     ("d2", "X [SEP] r [SEP] Y")}
@@ -59,7 +71,7 @@ def test_stateful_dedup_across_batches_and_restarts(spark, tmp_path):
           ("d1", "A [SEP] r [SEP] D", 0.6),   # new
           ("d3", "P [SEP] r [SEP] Q", 0.5)]   # new doc
     pd.DataFrame(b2, columns=cols).to_parquet(src / "f2.parquet", index=False)
-    _run_phase(spark, src, out, chk)
+    _run_phase(spark, src, out, chk, new_rows=3)
     rows = spark.read.parquet(str(out)).collect()
     got2 = {(r["docid"], r["triple_key"]) for r in rows}
     assert got2 == got1 | {("d1", "A [SEP] r [SEP] D"), ("d3", "P [SEP] r [SEP] Q")}
@@ -89,7 +101,7 @@ def test_state_ttl_evicts_idle_docid(spark, tmp_path):
     pd.DataFrame([("d1", "A [SEP] r [SEP] B", 0.9)], columns=cols).to_parquet(
         src / "f1.parquet", index=False
     )
-    _run_phase(spark, src, out, chk, ttl_ms=ttl)
+    _run_phase(spark, src, out, chk, new_rows=1, ttl_ms=ttl)
     assert spark.read.parquet(str(out)).count() == 1
 
     # let d1 go idle past the TTL, then drive a batch for ANOTHER docid so
@@ -98,13 +110,13 @@ def test_state_ttl_evicts_idle_docid(spark, tmp_path):
     pd.DataFrame([("d2", "X [SEP] r [SEP] Z", 0.6)], columns=cols).to_parquet(
         src / "f2.parquet", index=False
     )
-    _run_phase(spark, src, out, chk, ttl_ms=ttl)
+    _run_phase(spark, src, out, chk, new_rows=1, ttl_ms=ttl)
 
     # ...after which d1's old triple re-admits
     pd.DataFrame([("d1", "A [SEP] r [SEP] B", 0.5)], columns=cols).to_parquet(
         src / "f3.parquet", index=False
     )
-    _run_phase(spark, src, out, chk, ttl_ms=ttl)
+    _run_phase(spark, src, out, chk, new_rows=1, ttl_ms=ttl)
     rows = spark.read.parquet(str(out)).collect()
     a_rows = sorted(
         (r["score"] for r in rows if r["triple_key"] == "A [SEP] r [SEP] B")
