@@ -92,25 +92,16 @@ def with_edge_bucket(df: DataFrame, n_buckets: int = GRAPH_N_BUCKETS) -> DataFra
     )
 
 
-def write_graph(catalog, vertices: DataFrame, edges: DataFrame, run_id: str = "run0",
-                partition_by=None) -> None:
-    """Write the vertex and edge tables side by side, one driver thread per
-    table: each write is a few small stages, and one after the other they
-    leave cores idle while the driver plans the next. The threads carry
-    the caller's job group, local properties and tags; once both writes have
-    ended, the first failure (vertices before edges) re-raises. A table
-    that has been through maintenance (snapshot-versioned,
-    jobs/maintain_kg.py) gets a new snapshot instead of failing the
-    plain-write guard."""
+def write_graph(write, vertices: DataFrame, edges: DataFrame) -> None:
+    """Write the vertex and edge tables side by side: ``write(df, table)``
+    in one driver thread per table. Each write is a few small stages, and
+    one after the other they leave cores idle while the driver plans the
+    next. The threads carry the caller's job group, local properties and
+    tags; once both writes have ended, the first failure (vertices before
+    edges) re-raises."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
-
-    def write(df: DataFrame, table: str) -> None:
-        if getattr(catalog, "fmt", "parquet") != "iceberg" and catalog.is_versioned(table):
-            catalog.write_snapshot(df, table, partition_by=partition_by, run_id=run_id)
-        else:
-            catalog.write(df, table, partition_by=partition_by)
 
     target = inheritable_thread_target(vertices.sparkSession)(write)
     with ThreadPoolExecutor(max_workers=2) as pool:
@@ -121,13 +112,22 @@ def write_graph(catalog, vertices: DataFrame, edges: DataFrame, run_id: str = "r
 
 def materialize_graph(canon_triples: DataFrame, catalog, run_id: str = "run0"):
     """Write vertices/edges via the catalog (Iceberg or parquet shim),
-    bucketed by entity/edge id for pruning + balanced layout. On a
-    catalog that has been through maintenance, a full rebuild publishes a
-    NEW snapshot (``write_graph``) — periodic rebuild-to-reset-drift keeps
-    working after the first incremental merge."""
+    bucketed by entity/edge id for pruning + balanced layout, side by side
+    (``write_graph``). On a catalog that has been through maintenance
+    (tables snapshot-versioned, jobs/maintain_kg.py), a full rebuild
+    publishes a NEW snapshot instead of failing the plain-write guard —
+    periodic rebuild-to-reset-drift keeps working after the first
+    incremental merge."""
     v = with_vertex_bucket(build_vertices(canon_triples, run_id))
     e = with_edge_bucket(build_edges(canon_triples, run_id))
-    write_graph(catalog, v, e, run_id=run_id, partition_by=["bucket"])
+
+    def write(df: DataFrame, table: str) -> None:
+        if getattr(catalog, "fmt", "parquet") != "iceberg" and catalog.is_versioned(table):
+            catalog.write_snapshot(df, table, partition_by=["bucket"], run_id=run_id)
+        else:
+            catalog.write(df, table, partition_by=["bucket"])
+
+    write_graph(write, v, e)
     return v, e
 
 

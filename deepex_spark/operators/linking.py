@@ -133,14 +133,16 @@ def alias_entity_table(spark: SparkSession, aliases: dict[str, str]) -> DataFram
     """alias surface -> canonical entity name, as a dimension table. Built
     from an Arrow table, which the JVM reads directly: from a Python list
     it would be a pickled Python RDD, and broadcasting it would start
-    Python tasks."""
+    Python tasks. The table sits in driver memory, so it comes as one
+    partition: ``link_triples`` then dedupes it in that one task, with no
+    shuffle exchange (and no job of its own under AQE)."""
     import pyarrow as pa
 
     table = pa.table(
         [[k.lower() for k in aliases], list(aliases.values())],
         schema=pa.schema([("alias", pa.string()), ("canonical", pa.string())]),
     )
-    return spark.createDataFrame(table)
+    return spark.createDataFrame(table).coalesce(1)
 
 
 def link_triples(
@@ -153,15 +155,15 @@ def link_triples(
 
     broadcast: ``join(broadcast(alias_df))`` — no shuffle, skew-immune.
     salted:    explicit salted shuffle join (dictionary too big to ship).
+
+    Aliases equal after ``lower(trim())`` keep the first row. A
+    one-partition ``alias_df`` (``alias_entity_table``) is deduped in its
+    one task; any other, e.g. one mined from the crawl, over a shuffle
+    across all partitions.
     """
     dim = alias_df.select(
         F.lower(F.trim(F.col("alias"))).alias("_alias"), F.col("canonical").alias("_canonical")
-    )
-    if strategy == "broadcast":
-        # the dimension ships whole anyway: dedupe it in one task, which
-        # needs no exchange (and no job of its own under AQE)
-        dim = dim.coalesce(1)
-    dim = dim.dropDuplicates(["_alias"])
+    ).dropDuplicates(["_alias"])
 
     out = triples
     for side in ("subj", "obj"):

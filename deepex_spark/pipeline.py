@@ -122,8 +122,8 @@ def build_knowledge_graph(
     # and drop the cache once both have ended so none outlives the call
     canon = canon.persist()
     try:
-        write_graph(catalog, build_vertices(canon, cfg.run_id),
-                    build_edges(canon, cfg.run_id), run_id=cfg.run_id)
+        write_graph(catalog.write, build_vertices(canon, cfg.run_id),
+                    build_edges(canon, cfg.run_id))
     finally:
         canon.unpersist()
     return triples, catalog.read(spark, "vertices"), catalog.read(spark, "edges")

@@ -73,6 +73,28 @@ def test_build_kg_failing_graph_write_raises_and_unpersists(spark, tmp_path):
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= cached_before
 
 
+def test_build_kg_on_versioned_catalog_raises(spark, tmp_path):
+    """build_knowledge_graph writes plain tables: into a catalog whose graph
+    tables are snapshot-versioned (after jobs/maintain_kg.py) it raises the
+    plain-write guard and publishes nothing, whatever run_id it carries."""
+    from deepex_spark.pipeline import build_knowledge_graph
+    from deepex_spark.plans.catalog import Catalog
+    from deepex_spark.sources.pages import synth_pages
+
+    cat = Catalog(str(tmp_path / "kg"))
+    stub = spark.createDataFrame([("x", 1)], "canonical string, n int")
+    for table in ("vertices", "edges"):
+        cat.write_snapshot(stub, table, run_id="r1")
+    pages = synth_pages(spark, n_docs=4, seed=11)
+    for run_id in ("r1", "r2"):
+        with pytest.raises(ValueError, match="snapshot-versioned"):
+            build_knowledge_graph(pages, DeepExConfig.task(dist_const=2, run_id=run_id),
+                                  catalog=cat)
+    for table in ("vertices", "edges"):
+        assert cat.version_of_run(table, "r2") is None
+        assert [tuple(r) for r in cat.read(spark, table).collect()] == [("x", 1)]
+
+
 def test_spark_submit_job_cli(spark, tmp_path):
     # drive the spark-submit entry's main() in-process (same session reuse
     # via getOrCreate)

@@ -140,7 +140,11 @@ def test_link_triples_broadcast_and_salted(spark):
 
 def test_link_triples_colliding_aliases_resolve_to_the_first(spark):
     """Aliases equal after lower(trim()) resolve to the first one in the
-    alias table's order, across its partitions, with either strategy."""
+    alias table's order, with either strategy: in alias_entity_table's one
+    partition, and across the partitions of a table spread over several
+    (deduped over a shuffle)."""
+    import pyarrow as pa
+
     from deepex_spark.operators.linking import alias_entity_table, link_triples
 
     aliases = {"POTUS": "first"}
@@ -148,18 +152,22 @@ def test_link_triples_colliding_aliases_resolve_to_the_first(spark):
     aliases[" potus"] = "second"
     aliases.update({f"more {i}": f"M{i}" for i in range(200)})
     aliases["Potus\t"] = "third"
-    alias = alias_entity_table(spark, aliases)
-    assert alias.rdd.getNumPartitions() > 1
+    local = alias_entity_table(spark, aliases)
+    assert local.rdd.getNumPartitions() == 1
+    spread = spark.createDataFrame(pa.table(
+        [[k.lower() for k in aliases], list(aliases.values())], names=["alias", "canonical"]))
+    assert spread.rdd.getNumPartitions() > 1
     tri = spark.createDataFrame(
         [("d1", " POTUS", "r", "potus ", 0.9), ("d2", "Potus", "r", "nobody", 0.1)],
         "docid string, subj string, rel string, obj string, score double",
     )
-    for strategy in ("broadcast", "salted"):
-        rows = link_triples(tri, alias, strategy=strategy).collect()
-        assert {r["subj_entity"] for r in rows} == {"first"}
-        assert sorted((r["obj_entity"], r["obj_linked"]) for r in rows) == [
-            ("first", True), ("nobody", False)
-        ]
+    for alias in (local, spread):
+        for strategy in ("broadcast", "salted"):
+            rows = link_triples(tri, alias, strategy=strategy).collect()
+            assert {r["subj_entity"] for r in rows} == {"first"}
+            assert sorted((r["obj_entity"], r["obj_linked"]) for r in rows) == [
+                ("first", True), ("nobody", False)
+            ]
 
 
 def test_alias_entity_table_schema_and_empty(spark):

@@ -190,15 +190,23 @@ def test_front_end_is_one_python_node(spark):
 
 
 def test_broadcast_link_plans_no_shuffle(spark):
-    """link_triples(strategy="broadcast") dedupes the alias dimension in the
-    one task that builds its broadcast: the plan has no shuffle exchange."""
+    """link_triples(strategy="broadcast") dedupes alias_entity_table's
+    one-partition dimension in the task that builds its broadcast: the plan
+    has no shuffle exchange."""
     from deepex_spark.operators.linking import alias_entity_table, link_triples
 
     tri = spark.createDataFrame(
         [("d1", "Barack Obama", "was born in", "Hawaii", 0.9)],
         "docid string, subj string, rel string, obj string, score double",
     )
-    alias = alias_entity_table(spark, {f"alias {i}": f"E{i}" for i in range(100)})
+    aliases = {f"alias {i}": f"E{i}" for i in range(100)}
+    alias = alias_entity_table(spark, aliases)
     plan = link_triples(tri, alias, strategy="broadcast")._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastExchange") >= 1, plan
     assert plan.count("Exchange") == plan.count("BroadcastExchange"), plan
+    # a dimension spread over partitions (one mined from the crawl) keeps
+    # its dedup across all of them, over a hash exchange on the alias
+    spread = spark.createDataFrame(list(aliases.items()), "alias string, canonical string")
+    assert spread.rdd.getNumPartitions() > 1
+    plan = link_triples(tri, spread, strategy="broadcast")._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange hashpartitioning(_alias" in plan, plan
