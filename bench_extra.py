@@ -77,7 +77,7 @@ def run_ktruss_profile(k: int = 8, n_rounds: int = 3) -> dict:
     for r in range(n_rounds):
         t0 = time.time()
         keep = (
-            live.join(_support_of(G, live), ["a", "b"], "left")
+            live.join(G._truss_support(live), ["a", "b"], "left")
             .select("a", "b", F.coalesce("support", F.lit(0)).alias("support"))
             .where(F.col("support") >= thr)
             .select("a", "b")
@@ -90,52 +90,6 @@ def run_ktruss_profile(k: int = 8, n_rounds: int = 3) -> dict:
     spark.stop()
     return {"metric": "ktruss_round_profile", "value": rounds[-1]["kept"],
             "unit": "edges", "rounds": rounds}
-
-
-def _support_of(G, live):
-    # the explode-based support pass, as used inside operators/graph.ktruss
-    from pyspark.sql import functions as F
-
-    deg = (
-        live.select(F.col("a").alias("x"))
-        .union(live.select(F.col("b").alias("x")))
-        .groupBy("x").agg(F.count("*").alias("deg"))
-    )
-    da, db = deg.alias("da"), deg.alias("db")
-    a_first = (F.col("da.deg") < F.col("db.deg")) | (
-        (F.col("da.deg") == F.col("db.deg")) & (F.col("a") < F.col("b"))
-    )
-    o = (
-        live.join(da, live["a"] == F.col("da.x"))
-        .join(db, live["b"] == F.col("db.x"))
-        .select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
-            F.when(a_first, F.col("db.deg")).otherwise(F.col("da.deg")).alias("dhi"),
-        )
-    )
-    o1, o2, o3 = o.alias("o1"), o.alias("o2"), o.hint("shuffle_hash").alias("o3")
-    hi_lt = (F.col("o1.dhi") < F.col("o2.dhi")) | (
-        (F.col("o1.dhi") == F.col("o2.dhi")) & (F.col("o1.hi") < F.col("o2.hi"))
-    )
-    tri = (
-        o1.join(o2, (F.col("o1.lo") == F.col("o2.lo")) & hi_lt)
-        .join(o3, (F.col("o3.lo") == F.col("o1.hi")) & (F.col("o3.hi") == F.col("o2.hi")))
-        .select(F.col("o1.lo").alias("v1"), F.col("o1.hi").alias("v2"), F.col("o2.hi").alias("v3"))
-    )
-    corners = tri.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("v1").alias("u"), F.col("v2").alias("v")),
-                F.struct(F.col("v1").alias("u"), F.col("v3").alias("v")),
-                F.struct(F.col("v2").alias("u"), F.col("v3").alias("v")),
-            )
-        ).alias("e")
-    )
-    return (
-        corners.select(F.least("e.u", "e.v").alias("a"), F.greatest("e.u", "e.v").alias("b"))
-        .groupBy("a", "b").agg(F.count("*").alias("support"))
-    )
 
 
 def run_local(n_docs: int = 300) -> dict:

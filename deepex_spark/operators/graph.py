@@ -385,17 +385,34 @@ def triangle_count(
     # feeds three self-join legs — materialize each once instead of
     # letting Spark re-derive the upstream self-join per consumer
     und = _undirected(edges, src, dst).localCheckpoint(eager=True)
-    deg = (
+    deg = _degrees(und)
+    oriented = _oriented(und, deg).localCheckpoint(eager=True)
+    tri = _triangles(oriented).agg(F.count("*").alias("n_triangles"))
+    nv = deg.agg(F.count("*").alias("n_vertices"))
+    ne = und.agg(F.count("*").alias("n_edges"))
+    return nv.crossJoin(ne).crossJoin(tri)
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """``(x, deg)``: every vertex of the canonical edge set ``und``
+    ``(a, b)`` with its degree."""
+    return (
         und.select(F.col("a").alias("x"))
         .union(und.select(F.col("b").alias("x")))
         .groupBy("x")
         .agg(F.count("*").alias("deg"))
     )
+
+
+def _oriented(und: DataFrame, deg: DataFrame) -> DataFrame:
+    """``(lo, hi, dhi)``: each edge of ``und`` directed from its lower
+    (degree, id) endpoint ``lo`` to the higher one ``hi``, whose degree is
+    ``dhi``. ``deg`` is a ``_degrees`` table covering both endpoints."""
     da, db = deg.alias("da"), deg.alias("db")
     a_first = (F.col("da.deg") < F.col("db.deg")) | (
         (F.col("da.deg") == F.col("db.deg")) & (F.col("a") < F.col("b"))
     )
-    oriented = (
+    return (
         und.join(da, und["a"] == F.col("da.x"))
         .join(db, und["b"] == F.col("db.x"))
         .select(
@@ -403,28 +420,34 @@ def triangle_count(
             F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
             F.when(a_first, F.col("db.deg")).otherwise(F.col("da.deg")).alias("dhi"),
         )
-        .localCheckpoint(eager=True)
     )
-    # shuffle_hash on the edge-table sides: the wedge OUTPUT is huge
-    # (sum-of-C(outdeg,2) rows) but each join's build side is just the
+
+
+def _triangles(oriented: DataFrame) -> DataFrame:
+    """``(v1, v2, v3)``: every triangle of an ``_oriented`` edge table
+    exactly once, as the wedge ``v1 -> v2, v1 -> v3`` at its minimum-
+    (degree, id) vertex ``v1`` (ordered ``v2`` before ``v3`` by (degree,
+    id)) closed by the oriented edge ``v2 -> v3``."""
+    # shuffle_hash on the closing join's edge-table side: the wedge stream
+    # is huge (sum-of-C(outdeg,2) rows) but the build side is just the
     # oriented edge table, so hashing it beats sorting the wedge stream —
     # measured 1.6-2.8x on the sf0.1 co-occurrence graph. Orientation
     # bounds per-key build size, so the hash side stays partition-safe at
-    # scale (and AQE may still re-pick on observed sizes).
-    o1 = oriented.hint("shuffle_hash").alias("o1")
+    # scale (and AQE may still re-pick on observed sizes). The wedge join's
+    # legs are both the edge table; hashing o1 there measured slower at
+    # sf0.1 on 4 cores (triangle enumeration 8.2 -> 9.5 s, the k-truss
+    # support pass 11.2 -> 13.2 s, medians of 8 alternating runs).
+    o1 = oriented.alias("o1")
     o2 = oriented.alias("o2")
     o3 = oriented.hint("shuffle_hash").alias("o3")
     hi_lt = (F.col("o1.dhi") < F.col("o2.dhi")) | (
         (F.col("o1.dhi") == F.col("o2.dhi")) & (F.col("o1.hi") < F.col("o2.hi"))
     )
-    tri = (
+    return (
         o1.join(o2, (F.col("o1.lo") == F.col("o2.lo")) & hi_lt)
         .join(o3, (F.col("o3.lo") == F.col("o1.hi")) & (F.col("o3.hi") == F.col("o2.hi")))
-        .agg(F.count("*").alias("n_triangles"))
+        .select(F.col("o1.lo").alias("v1"), F.col("o1.hi").alias("v2"), F.col("o2.hi").alias("v3"))
     )
-    nv = deg.agg(F.count("*").alias("n_vertices"))
-    ne = und.agg(F.count("*").alias("n_edges"))
-    return nv.crossJoin(ne).crossJoin(tri)
 
 
 def link_pred_heuristics(
@@ -536,14 +559,7 @@ def kcore(
     live = _undirected(edges, src, dst).localCheckpoint(eager=True)
     n_live = live.count()
     for _ in range(n_rounds):
-        keep = (
-            live.select(F.col("a").alias("x"))
-            .union(live.select(F.col("b").alias("x")))
-            .groupBy("x")
-            .agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= k)
-            .select("x")
-        )
+        keep = _degrees(live).where(F.col("deg") >= k).select("x")
         ka, kb = keep.alias("ka"), keep.alias("kb")
         live = (
             live.join(ka, live["a"] == F.col("ka.x"))
@@ -558,11 +574,8 @@ def kcore(
             # and the result is identical to running all n_rounds
             break
         n_live = n_new
-    return (
-        live.select(F.col("a").alias("x"))
-        .union(live.select(F.col("b").alias("x")))
-        .groupBy(F.col("x").alias("entity_id"))
-        .agg(F.count("*").alias("core_deg"))
+    return _degrees(live).select(
+        F.col("x").alias("entity_id"), F.col("deg").alias("core_deg")
     )
 
 
@@ -1302,37 +1315,8 @@ def clustering_coefficients(
     one fixed rational expression over (t, deg), rounded once.
     """
     und = _undirected(edges, src, dst).localCheckpoint(eager=True)
-    deg = (
-        und.select(F.col("a").alias("x"))
-        .union(und.select(F.col("b").alias("x")))
-        .groupBy("x")
-        .agg(F.count("*").alias("deg"))
-    )
-    da, db = deg.alias("da"), deg.alias("db")
-    a_first = (F.col("da.deg") < F.col("db.deg")) | (
-        (F.col("da.deg") == F.col("db.deg")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        und.join(da, und["a"] == F.col("da.x"))
-        .join(db, und["b"] == F.col("db.x"))
-        .select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
-            F.when(a_first, F.col("db.deg")).otherwise(F.col("da.deg")).alias("dhi"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    o1 = oriented.hint("shuffle_hash").alias("o1")
-    o2 = oriented.alias("o2")
-    o3 = oriented.hint("shuffle_hash").alias("o3")
-    hi_lt = (F.col("o1.dhi") < F.col("o2.dhi")) | (
-        (F.col("o1.dhi") == F.col("o2.dhi")) & (F.col("o1.hi") < F.col("o2.hi"))
-    )
-    tri = (
-        o1.join(o2, (F.col("o1.lo") == F.col("o2.lo")) & hi_lt)
-        .join(o3, (F.col("o3.lo") == F.col("o1.hi")) & (F.col("o3.hi") == F.col("o2.hi")))
-        .select(F.col("o1.lo").alias("v1"), F.col("o1.hi").alias("v2"), F.col("o2.hi").alias("v3"))
-    )
+    deg = _degrees(und)
+    tri = _triangles(_oriented(und, deg).localCheckpoint(eager=True))
     # ONE pass over the triangle stream: a union of three selects re-runs
     # the (expensive) wedge+closing join subtree once per branch — Spark
     # does no CSE across union legs — measured 2.5x the whole enumeration
@@ -1383,63 +1367,6 @@ def ktruss(
     are cheaper and AQE re-plans on observed sizes. Everything is
     exact integer arithmetic.
     """
-
-    def _support(live: DataFrame) -> DataFrame:
-        deg = (
-            live.select(F.col("a").alias("x"))
-            .union(live.select(F.col("b").alias("x")))
-            .groupBy("x")
-            .agg(F.count("*").alias("deg"))
-        )
-        da, db = deg.alias("da"), deg.alias("db")
-        a_first = (F.col("da.deg") < F.col("db.deg")) | (
-            (F.col("da.deg") == F.col("db.deg")) & (F.col("a") < F.col("b"))
-        )
-        o = (
-            live.join(da, live["a"] == F.col("da.x"))
-            .join(db, live["b"] == F.col("db.x"))
-            .select(
-                F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
-                F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
-                F.when(a_first, F.col("db.deg")).otherwise(F.col("da.deg")).alias("dhi"),
-            )
-        )
-        o1, o2, o3 = o.alias("o1"), o.alias("o2"), o.hint("shuffle_hash").alias("o3")
-        hi_lt = (F.col("o1.dhi") < F.col("o2.dhi")) | (
-            (F.col("o1.dhi") == F.col("o2.dhi")) & (F.col("o1.hi") < F.col("o2.hi"))
-        )
-        tri = (
-            o1.join(o2, (F.col("o1.lo") == F.col("o2.lo")) & hi_lt)
-            .join(
-                o3,
-                (F.col("o3.lo") == F.col("o1.hi")) & (F.col("o3.hi") == F.col("o2.hi")),
-            )
-            .select(
-                F.col("o1.lo").alias("v1"),
-                F.col("o1.hi").alias("v2"),
-                F.col("o2.hi").alias("v3"),
-            )
-        )
-        # single pass over the triangle stream (a 3-branch union would
-        # re-run the wedge+closing joins once per branch — no CSE across
-        # union legs; measured 2.5x the enumeration cost)
-        corners = tri.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("v1").alias("u"), F.col("v2").alias("v")),
-                    F.struct(F.col("v1").alias("u"), F.col("v3").alias("v")),
-                    F.struct(F.col("v2").alias("u"), F.col("v3").alias("v")),
-                )
-            ).alias("e")
-        )
-        return (
-            corners.select(
-                F.least("e.u", "e.v").alias("a"), F.greatest("e.u", "e.v").alias("b")
-            )
-            .groupBy("a", "b")
-            .agg(F.count("*").alias("support"))
-        )
-
     # Hybrid delta peeling. Supports are MAINTAINED across rounds by the
     # truss invariant
     #   S_{r+1}(e) = S_r(e) - #{distinct triangles of live_r containing e
@@ -1464,7 +1391,7 @@ def ktruss(
 
     def _with_support(edge_set: DataFrame) -> DataFrame:
         return (
-            edge_set.join(_support(edge_set), ["a", "b"], "left")
+            edge_set.join(_truss_support(edge_set), ["a", "b"], "left")
             .select(
                 "a", "b",
                 F.coalesce(F.col("support"), F.lit(0).cast("long")).alias("support"),
@@ -1504,6 +1431,31 @@ def ktruss(
     return sup.where(F.col("support") >= 1).select("a", "b", "support")
 
 
+def _truss_support(live: DataFrame) -> DataFrame:
+    """``(a, b, support)``: per canonical edge of ``live``, the number of
+    its triangles (edges in none get no row)."""
+    tri = _triangles(_oriented(live, _degrees(live)))
+    # single pass over the triangle stream (a 3-branch union would
+    # re-run the wedge+closing joins once per branch — no CSE across
+    # union legs; measured 2.5x the enumeration cost)
+    corners = tri.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("v1").alias("u"), F.col("v2").alias("v")),
+                F.struct(F.col("v1").alias("u"), F.col("v3").alias("v")),
+                F.struct(F.col("v2").alias("u"), F.col("v3").alias("v")),
+            )
+        ).alias("e")
+    )
+    return (
+        corners.select(
+            F.least("e.u", "e.v").alias("a"), F.greatest("e.u", "e.v").alias("b")
+        )
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("support"))
+    )
+
+
 def _truss_delta_loss(removed: DataFrame, graph: DataFrame) -> DataFrame:
     """Per canonical edge, the number of DISTINCT triangles of ``graph``
     that contain at least one ``removed`` edge — the support decrement for
@@ -1511,38 +1463,21 @@ def _truss_delta_loss(removed: DataFrame, graph: DataFrame) -> DataFrame:
     lower-degree endpoint (hub-safe, the same degree-orientation idea as
     ``triangle_count``); triangles found via several removed edges are
     deduped by their sorted vertex triple before the per-edge count."""
-    deg = (
-        graph.select(F.col("a").alias("x"))
-        .union(graph.select(F.col("b").alias("x")))
-        .groupBy("x")
-        .agg(F.count("*").alias("deg"))
-    )
-    da, db = deg.alias("da"), deg.alias("db")
-    a_small = (F.col("da.deg") < F.col("db.deg")) | (
-        (F.col("da.deg") == F.col("db.deg")) & (F.col("a") < F.col("b"))
-    )
-    r = (
-        removed.join(da, removed["a"] == F.col("da.x"))
-        .join(db, removed["b"] == F.col("db.x"))
-        .select(
-            F.when(a_small, F.col("a")).otherwise(F.col("b")).alias("probe"),
-            F.when(a_small, F.col("b")).otherwise(F.col("a")).alias("other"),
-        )
-    )
+    r = _oriented(removed, _degrees(graph))
     adj = graph.select(F.col("a").alias("x"), F.col("b").alias("w")).union(
         graph.select(F.col("b").alias("x"), F.col("a").alias("w"))
     )
-    wedges = r.join(adj.hint("shuffle_hash"), r["probe"] == adj["x"]).select(
-        "probe", "other", "w"
+    wedges = r.join(adj.hint("shuffle_hash"), r["lo"] == adj["x"]).select(
+        "lo", "hi", "w"
     )
     closing = wedges.join(
         graph.alias("g2"),
-        (F.least(F.col("other"), F.col("w")) == F.col("g2.a"))
-        & (F.greatest(F.col("other"), F.col("w")) == F.col("g2.b")),
+        (F.least(F.col("hi"), F.col("w")) == F.col("g2.a"))
+        & (F.greatest(F.col("hi"), F.col("w")) == F.col("g2.b")),
         "left_semi",
     )
     tri = closing.select(
-        F.array_sort(F.array("probe", "other", "w")).alias("t")
+        F.array_sort(F.array("lo", "hi", "w")).alias("t")
     ).distinct()
     edges3 = tri.select(
         F.explode(

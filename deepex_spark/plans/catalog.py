@@ -147,9 +147,9 @@ class Catalog:
         if self.fmt == "iceberg":  # pragma: no cover
             return spark.read.format("iceberg").load(table)
         # snapshot-versioned tables serve the CURRENT version to plain
-        # readers too — after a maintenance run migrates a table, every
-        # existing read() consumer sees the merged data, not the stale
-        # pre-migration root files
+        # readers too — once a maintenance run moves a table to snapshots,
+        # every existing read() consumer sees the merged data, not the
+        # stale root files from before the first snapshot
         if self._snapshot_manifest(table)["versions"]:
             return self.read_snapshot(spark, table)
         return _scan(spark, self.path(table))

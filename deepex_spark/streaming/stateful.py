@@ -25,12 +25,12 @@ longer than the re-crawl period).
 
 CHECKPOINT COMPATIBILITY: ``STATE_SCHEMA`` gained the ``bloom binary``
 field in round 3 — a query restarted from a checkpoint written by the
-pre-bloom schema (``seen array<long>`` only) fails the state-schema
-check; migrate with ``streaming/migrate.py`` (statestore-reader export →
-seed rows → fresh checkpoint; tests/test_streaming_migrate.py restores a
-real pre-bloom checkpoint end-to-end). Likewise, turning ``ttl_ms``
-on/off changes the timeout conf, which Spark accepts on restart, but
-timers only attach to keys updated after the change.
+pre-bloom schema (``seen array<long>`` only) fails Spark's state-schema
+check at start; restart such a query at a fresh checkpoint location
+(its state starts empty, so triples it had emitted are emitted again).
+Likewise, turning ``ttl_ms`` on/off changes the timeout conf, which
+Spark accepts on restart, but timers only attach to keys updated after
+the change.
 
 No reference counterpart (the reference is strictly batch); this is the
 Structured-Streaming extension of O19/O22's dedup semantics.
@@ -73,25 +73,12 @@ def _bloom_add(bloom: bytearray, fp: int) -> None:
 
 
 def _make_dedup_fn(ttl_ms: int | None):
-    """Build the per-group dedup function; ``ttl_ms`` arms a processing-
-    time timeout re-set on every update, so a docid idle for > ttl_ms is
-    evicted (state.remove) on a subsequent micro-batch."""
-
-    def _absorb(seen: set, bloom, fps) -> "bytearray | None":
-        """Insert raw fingerprints into state (no emission) under the same
-        bound as live traffic — used by the checkpoint migrator's seed rows
-        (streaming/migrate.py)."""
-        for f in fps:
-            f = int(f)
-            if f in seen or (bloom is not None and _bloom_has(bloom, f)):
-                continue
-            if len(seen) < MAX_EXACT:
-                seen.add(f)
-            else:
-                if bloom is None:
-                    bloom = bytearray(_BLOOM_BYTES)
-                _bloom_add(bloom, f)
-        return bloom
+    """Build the per-group dedup function: one streamed pass over the
+    docid's pandas batches emits each unseen fingerprint's row and adds it
+    to the exact set, or to the bloom tail once ``MAX_EXACT`` are held.
+    ``ttl_ms`` arms a processing-time timeout re-set on every update, so
+    a docid idle for > ttl_ms is evicted (state.remove) on a subsequent
+    micro-batch."""
 
     def _dedup_fn(key, pdfs, state: GroupState):
         if ttl_ms is not None and state.hasTimedOut:
@@ -104,28 +91,8 @@ def _make_dedup_fn(ttl_ms: int | None):
         else:
             seen, bloom = set(), None
         out = []
-        # two passes when a seed column is present (migration runs only):
-        # absorb every seed row's fingerprints FIRST so data rows for the
-        # same docid in the same (first) micro-batch are deduped against
-        # the migrated state. The common path stays a streamed generator.
-        it = iter(pdfs)
-        first = next(it, None)
-        if first is None:
-            batches = []
-        elif "seed_fps" in first.columns:
-            batches = [first, *it]
-            for pdf in batches:
-                for fps in pdf["seed_fps"]:
-                    if fps is not None:
-                        bloom = _absorb(seen, bloom, fps)
-        else:
-            from itertools import chain
-
-            batches = chain([first], it)
-        for pdf in batches:
+        for pdf in pdfs:
             for k, s in zip(pdf["triple_key"], pdf["score"]):
-                if k is None:  # seed row
-                    continue
                 f = _fp(k)
                 if f in seen or (bloom is not None and _bloom_has(bloom, f)):
                     continue

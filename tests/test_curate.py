@@ -5,6 +5,7 @@ queries.py (events_sessionize / sample_stratified / ngram_topk /
 kg_triangle_count); these tests pin the semantic edge cases the oracles
 can't isolate."""
 
+from collections import Counter
 from datetime import datetime, timedelta
 
 import pytest
@@ -24,7 +25,12 @@ from deepex_spark.operators.curate import (
     stratified_sample,
     tfidf_terms,
 )
-from deepex_spark.operators.graph import kcore, triangle_count
+from deepex_spark.operators.graph import (
+    clustering_coefficients,
+    kcore,
+    ktruss,
+    triangle_count,
+)
 
 T0 = datetime(2024, 1, 1, 12, 0, 0)
 
@@ -234,20 +240,39 @@ class TestTriangleProperty:
     )
     @settings(max_examples=10, deadline=None)
     def test_matches_naive(self, spark, pairs):
+        # every consumer of the shared triangle enumerator against the
+        # naive triangle set of the same graph
         edges = spark.createDataFrame(
             [(int(u), int(v)) for u, v in pairs] or [(0, 0)], "src long, dst long"
         )
         [row] = triangle_count(edges).collect()
         und = {frozenset((u, v)) for u, v in pairs if u != v}
-        naive = sum(
-            1
+        naive = [
+            (x, y, z)
             for x in range(10)
             for y in range(x + 1, 10)
             for z in range(y + 1, 10)
             if {frozenset((x, y)), frozenset((y, z)), frozenset((x, z))} <= und
-        )
-        assert row["n_triangles"] == naive
+        ]
+        assert row["n_triangles"] == len(naive)
         assert row["n_edges"] == len(und)
+
+        deg = Counter(v for e in und for v in e)
+        n_tri = Counter(v for t in naive for v in t)
+        lcc = {
+            r["vertex"]: (r["deg"], r["n_tri"])
+            for r in clustering_coefficients(edges).collect()
+        }
+        assert lcc == {v: (d, n_tri[v]) for v, d in deg.items()}
+
+        support = Counter(
+            e for x, y, z in naive for e in ((x, y), (x, z), (y, z))
+        )
+        truss = {
+            (r["a"], r["b"]): r["support"]
+            for r in ktruss(edges, k=3, n_rounds=0).collect()
+        }
+        assert truss == dict(support)
 
 
 class TestFunnel:

@@ -519,3 +519,42 @@ def test_ktruss_peel_cascades(spark):
     # at k=3 (support >= 1) both triangles survive intact
     got = ktruss(edges, k=3, n_rounds=2).count()
     assert got == 5
+
+
+def _peel_reference(edge_list, k, n_rounds):
+    """Brute-force k-truss peel: recount every live edge's support per
+    round, drop those under max(k-2, 1), keep supported survivors."""
+    def support(es):
+        nbr = {}
+        for a, b in es:
+            nbr.setdefault(a, set()).add(b)
+            nbr.setdefault(b, set()).add(a)
+        return {(a, b): len(nbr[a] & nbr[b]) for a, b in es}
+
+    live = {(min(e), max(e)) for e in edge_list if e[0] != e[1]}
+    for _ in range(n_rounds):
+        s = support(live)
+        live = {e for e in live if s[e] >= max(k - 2, 1)}
+    return {e: n for e, n in support(live).items() if n >= 1}
+
+
+def test_ktruss_delta_peel_matches_reference(spark, monkeypatch):
+    """A round removing under delta_ratio (5%) of the live edges takes
+    the delta branch: K10 plus a vertex joined to two K10 vertices at
+    k=4 drops only the 2 pendant edges of 47."""
+    import deepex_spark.operators.graph as G
+
+    real, calls = G._truss_delta_loss, []
+
+    def spy(removed, graph):
+        calls.append(removed.count())
+        return real(removed, graph)
+
+    monkeypatch.setattr(G, "_truss_delta_loss", spy)
+    edge_list = [(a, b) for a in range(10) for b in range(a + 1, 10)]
+    edge_list += [(0, 10), (1, 10)]
+    edges = spark.createDataFrame(edge_list, "src long, dst long")
+    got = {(r["a"], r["b"]): r["support"] for r in G.ktruss(edges, k=4, n_rounds=2).collect()}
+    want = _peel_reference(edge_list, k=4, n_rounds=2)
+    assert got == want and len(want) == 45
+    assert calls == [2]

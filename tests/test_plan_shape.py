@@ -210,3 +210,18 @@ def test_broadcast_link_plans_no_shuffle(spark):
     assert spread.rdd.getNumPartitions() > 1
     plan = link_triples(tri, spread, strategy="broadcast")._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning(_alias" in plan, plan
+
+
+def test_triangle_closing_join_hashes_the_edge_table(spark):
+    """_triangles, shared by every triangle consumer, hashes the oriented
+    edge table (o3) against the wedge stream in the closing join, and
+    leaves the wedge join (o1 with o2, both the edge table) to the
+    planner."""
+    from deepex_spark.operators.graph import _degrees, _oriented, _triangles
+
+    und = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "a long, b long")
+    plan = _logical_plan(_triangles(_oriented(und, _degrees(und))))
+    closing, wedge = [ln for ln in plan.splitlines() if "Join Inner" in ln][:2]
+    assert "(lo" in closing and "(lo" in wedge, plan
+    assert closing.endswith(", rightHint=(strategy=shuffle_hash)"), plan
+    assert plan.count("Hint=") == 1, plan  # neither o1 nor o2 is hinted
