@@ -10,8 +10,8 @@ the only shuffles are the groupBys/joins intrinsic to the algorithm.
 * MinHash + LSH        — k permutation-min signatures over shingle codes,
                           banded bucket join for candidate pairs, signature
                           agreement as the similarity estimate
-* SimHash              — sign-of-sum over per-token hash bits, near-dup via
-                          banded hamming join
+* SimHash              — sign-of-sum over per-token hash bits, one
+                          fingerprint per document
 * embedding near-dup   — random-hyperplane LSH buckets + in-bucket cosine
 
 Hash arithmetic uses ``((code % P) * a + b) % P`` with P = 2^31 - 1 and
@@ -224,42 +224,6 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> DataFr
         bit = F.when(F.col(f"s{b}") > 0, F.lit(2 ** b).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
         sim = bit if sim is None else (sim + bit)
     return agg.select("id", sim.alias("simhash"))
-
-
-def simhash_dup_pairs(
-    df: DataFrame, text_col: str, id_col: str, bits: int = 32, band_bits: int = 8, max_hamming: int = 6
-) -> DataFrame:
-    """Near-dup pairs by banded hamming join: docs equal on any band of
-    ``band_bits`` bits become candidates; exact hamming distance filters."""
-    sh = simhash(df, text_col, id_col, bits)
-    n_bands = bits // band_bits
-    mask = (1 << band_bits) - 1
-    bandcols = [
-        F.struct(
-            F.lit(i).alias("band_id"),
-            F.expr(f"(simhash >> {i * band_bits}) & {mask}").alias("band_val"),
-        )
-        for i in range(n_bands)
-    ]
-    banded = sh.select("id", "simhash", F.explode(F.array(*bandcols)).alias("bk")).select(
-        "id", "simhash", "bk.band_id", "bk.band_val"
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.expr("bit_count(a.simhash ^ b.simhash)").alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
 
 
 # ---------------------------------------------------------------------------

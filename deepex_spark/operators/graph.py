@@ -138,9 +138,9 @@ def merge_vertices(existing: DataFrame, delta: DataFrame, run_id: str = "merge")
     exactly ONE run, so batches are doc-disjoint and per-batch
     ``n_docs``/``n_mentions`` counts add without double counting (the
     associativity ``merge(build(A), build(B)) == build(A ∪ B)`` is pinned
-    by tests/test_graph_merge.py). One groupBy on the merge key; at scale
-    both sides arrive bucketed by entity_id (plans/bucketed.py) so the
-    union aggregates without a full re-shuffle."""
+    by tests/test_graph_merge.py). One groupBy on the merge key: the
+    union of both sides is partially aggregated, then shuffled once by
+    (entity_id, canonical)."""
     both = existing.unionByName(delta)
     return (
         both.groupBy("entity_id", "canonical")
@@ -180,11 +180,17 @@ def merge_edges(existing: DataFrame, delta: DataFrame, run_id: str = "merge") ->
     )
 
 
+# round cap for connected_components: pointer jumping makes the round
+# count O(log diameter), so the loop reaches its fixpoint long before
+# this. The cap only stops a runaway, and raises rather than returning
+# labels that have not converged.
+CC_MAX_ROUNDS = 50
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 50,
 ) -> DataFrame:
     """Connected components over an undirected edge list -> (v, comp) with
     ``comp`` = the smallest vertex id in v's component (a deterministic,
@@ -205,7 +211,8 @@ def connected_components(
     early-exit scan). A mega-component's hub key skews the groupBy; AQE's
     skew handling splits it. ``localCheckpoint`` truncates each round's
     lineage — without it the unioned plan doubles per iteration and the
-    optimizer, not the data, becomes the bottleneck.
+    optimizer, not the data, becomes the bottleneck. Labels still
+    changing after ``CC_MAX_ROUNDS`` rounds raise ``RuntimeError``.
     """
     idt = _id_cast_type(edges.schema[src].dataType, edges.schema[dst].dataType)
     sym = edges.select(
@@ -221,7 +228,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     labels = sym.select("u").distinct().withColumn("comp", F.col("u"))
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         nbr = (
             sym.join(labels, on="u")
             .groupBy(F.col("v").alias("u"))
@@ -249,8 +256,10 @@ def connected_components(
         )
         labels = jumped
         if changed == 0:
-            break
-    return labels.select(F.col("u").alias("v"), "comp")
+            return labels.select(F.col("u").alias("v"), "comp")
+    raise RuntimeError(
+        f"connected_components did not converge within {CC_MAX_ROUNDS} rounds"
+    )
 
 
 def khop_distances(

@@ -1,10 +1,10 @@
-"""robots.txt parsing + crawl-frontier politeness filtering.
+"""robots.txt parsing + per-url politeness verdicts.
 
-A crawl pipeline that discovers a frontier (``crawl_frontier``) but
-fetches without consulting robots.txt is not shippable; this module adds
-the decision layer. Input is a ``(host, robots_txt)`` table — one row
-per host, the body of ``http://host/robots.txt`` as fetched — and the
-output is a rule table any url set can be joined against.
+A crawl pipeline that fetches without consulting robots.txt is not
+shippable; this module adds the decision layer. ``parse_robots`` turns a
+``(host, robots_txt)`` table — one row per host, the body of
+``http://host/robots.txt`` as fetched — into a rule table, and
+``robots_verdict`` joins any url set against it.
 
 Supported grammar (the documented subset, mirrored line-for-line by the
 ``crawl_robots_filter`` DuckDB oracle):
@@ -30,10 +30,10 @@ Supported grammar (the documented subset, mirrored line-for-line by the
 Scale shape: parsing is per-host window algebra over exploded lines
 (robots files are KBs; the window partitions by host and never sees two
 hosts in one frame). The verdict join broadcasts the RULE table —
-robots rules are tiny next to a frontier (millions of hosts x a handful
-of rules vs billions of candidate urls), so the frontier side never
+robots rules are tiny next to a url set (millions of hosts x a handful
+of rules vs billions of candidate urls), so the url side never
 shuffles; the per-url argmax folds into one aggregate keyed by the
-frontier row.
+url row.
 """
 
 from __future__ import annotations
@@ -121,24 +121,4 @@ def robots_verdict(
         F.coalesce(F.col("_best.is_allow"), F.lit(True)).alias("allowed"),
         F.col("_best.path_prefix").alias("matched_prefix"),
         F.col("_best.prefix_len").alias("matched_len"),
-    )
-
-
-def filter_frontier_robots(
-    frontier: DataFrame, robots: DataFrame
-) -> DataFrame:
-    """Politeness-filter a ``crawl_frontier`` output: keep only targets
-    robots.txt allows for the generic agent. Expects frontier columns
-    ``dst_canon``/``dst_host`` and a raw ``(host, robots_txt)`` table."""
-    rules = parse_robots(robots)
-    with_path = frontier.withColumn(
-        "_path",
-        F.when(
-            F.regexp_replace("dst_canon", r"^[a-z0-9+.\-]+://[^/?]*", "") == "",
-            F.lit("/"),
-        ).otherwise(F.regexp_replace("dst_canon", r"^[a-z0-9+.\-]+://[^/?]*", "")),
-    )
-    verdict = robots_verdict(with_path, rules, host_col="dst_host", path_col="_path")
-    return verdict.filter(F.col("allowed")).drop(
-        "_path", "allowed", "matched_prefix", "matched_len"
     )

@@ -3273,8 +3273,8 @@ def events_sessionize(spark, sf_dir):
     """,
 )
 def events_session_window(spark, sf_dir):
-    """Spark's NATIVE merging session window (streaming/sessions.py,
-    the streaming-capable path) run in batch mode, pinned against the
+    """Spark's NATIVE merging session window
+    (streaming/sessions.py::session_agg), pinned against the
     first-principles lag-cumsum sessionization re-derived in DuckDB —
     proving session_window's inclusive gap boundary and window bounds
     (start = first event, end = last event + gap) match the batch
@@ -4955,12 +4955,10 @@ def events_cohort_retention(spark, sf_dir):
 )
 def events_attribution(spark, sf_dir):
     """Time-range attribution join (streaming/joins.py
-    ``attribute_conversions``, the batch == stream body): every purchase
-    matched to the same user's views in the trailing 4 hours. The
-    interval bound is timestamp subtraction on TIMESTAMP_NTZ —
-    microsecond-exact and tz-free on both engines. The streaming twin
-    (watermarked StreamingSymmetricHashJoin) is pinned batch == stream
-    by tests/test_streaming_joins.py."""
+    ``attribute_conversions``): every purchase matched to the same
+    user's views in the trailing 4 hours. The interval bound is
+    timestamp subtraction on TIMESTAMP_NTZ — microsecond-exact and
+    tz-free on both engines."""
     from deepex_spark.streaming.joins import attribute_conversions
 
     ev = load(spark, sf_dir, "events")
@@ -6635,8 +6633,8 @@ def kg_merge_incremental(spark, sf_dir):
     merge_edges is a no-op and float summation order cannot bite).
 
     Scale: each batch build is one map-side-combined groupBy; the fold is
-    one more groupBy on the same edge key — at scale both sides arrive
-    bucketed (plans/bucketed.py) and old batches are never re-read."""
+    one more groupBy on the same edge key, one shuffle over the union of
+    the two builds."""
     from deepex_spark.operators.graph import merge_edges
 
     def build(parity: int) -> DataFrame:

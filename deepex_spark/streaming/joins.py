@@ -1,29 +1,11 @@
-"""Stream-stream and stream-static joins (Structured Streaming).
+"""Time-range attribution join over event tables.
 
-The reference is strictly batch; these are the Spark-native joins a
-continuous crawl/event pipeline needs beyond it:
-
-* **Stream-stream time-range join** (``attribute_conversions``): the
-  canonical attribution shape — match each conversion event to the
-  impressions by the same user in the trailing attribution window.
-  In streaming mode BOTH sides carry a watermark and the join condition
-  carries the time-range predicate; together they let Spark evict
-  buffered rows once the watermark passes the window (state is bounded
-  by in-horizon events per side, the standard stream-stream join
-  design). Without the range predicate the state would grow forever —
-  Spark would have to keep every impression in case a future conversion
-  matches.
-* **Stream-static join** (``enrich_with_dim``): each micro-batch joins
-  against a static dimension; the dim side is broadcast so the stream
-  side never shuffles (stateless — no watermark needed on the static
-  side, and the stream side needs none either for an inner equi-join).
-
-One body serves batch and stream (batch == stream, same as
-``sessions.session_agg``): the ``events_attribution`` registry entry
-runs the SAME ``attribute_conversions`` on the batch events table
-against a DuckDB range-self-join oracle, and
-``tests/test_streaming_joins.py`` pins streaming output == batch output
-on the same rows.
+``attribute_conversions`` matches each conversion event to the
+impressions by the same user in the trailing attribution window: an
+equi-join on the user key with the time range as the join's residual
+predicate. The ``events_attribution`` registry entry runs it on the
+events table against a DuckDB range self-join oracle, and
+tests/test_streaming_joins.py pins the window boundaries.
 """
 
 from __future__ import annotations
@@ -44,17 +26,15 @@ def attribute_conversions(
     lower bound so an impression exactly ``window`` old has expired,
     inclusive upper so a same-instant impression still counts.
 
-    Inputs are the two event streams projected to
+    Inputs are the two event tables projected to
     ``(event_id, ts, user_id)``; output is one row per (impression,
     conversion) match: ``(user_id, imp_event_id, conv_event_id, imp_ts,
     conv_ts)``. Timestamp arithmetic is subtraction against a day-time
     interval — microsecond-exact and tz-free on TIMESTAMP_NTZ (never
     interprets a wall time in the session zone).
 
-    Batch plan: an equi-join on user_id with the range as a post-join
-    filter — one exchange per side on the natural key. Streaming plan:
-    the same join with watermarks becomes a StreamingSymmetricHashJoin
-    whose per-side state is evicted by watermark + range bound.
+    Plan: an equi-join on user_id with the range as a post-join filter —
+    one exchange per side on the natural key.
     """
     imp = impressions.select(
         F.col("event_id").alias("imp_event_id"),
@@ -74,51 +54,3 @@ def attribute_conversions(
         & (F.col("imp_ts") > F.col("conv_ts") - win),
     )
     return joined.select("user_id", "imp_event_id", "conv_event_id", "imp_ts", "conv_ts")
-
-
-def stream_attribute_conversions(
-    impressions_stream: DataFrame,
-    conversions_stream: DataFrame,
-    window: str = "30 minutes",
-    watermark: str = "1 hour",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming twin of ``attribute_conversions``: watermark both sides,
-    run the same join body, cast the emitted event times back to NTZ.
-
-    ``withWatermark`` requires TIMESTAMP (an instant), so NTZ event time
-    round-trips through the session zone exactly as
-    ``sessions.stream_sessionize`` documents (identity under any fixed
-    zone). State bounds: an impression is held until the watermark says
-    no conversion within ``window`` of it can still arrive; a conversion
-    is dropped as soon as the micro-batch that matched it completes
-    (its matches are emitted immediately — inner join, append mode).
-    """
-
-    def wm(df: DataFrame) -> DataFrame:
-        return df.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withWatermark(
-            ts_col, watermark
-        )
-
-    out = attribute_conversions(
-        wm(impressions_stream),
-        wm(conversions_stream),
-        window=window,
-        user_col=user_col,
-        ts_col=ts_col,
-    )
-    return out.withColumn("imp_ts", F.col("imp_ts").cast("timestamp_ntz")).withColumn(
-        "conv_ts", F.col("conv_ts").cast("timestamp_ntz")
-    )
-
-
-def enrich_with_dim(
-    stream: DataFrame, dim: DataFrame, key: str, how: str = "inner"
-) -> DataFrame:
-    """Stream-static join: per micro-batch, join the stream against a
-    static dimension. The dim side is broadcast — the stream side never
-    shuffles, so the join is stateless and adds no watermark or state
-    store. The static side is re-read per micro-batch (Spark semantics),
-    so a slowly-refreshed dim table picks up new rows between batches."""
-    return stream.join(F.broadcast(dim), on=key, how=how)

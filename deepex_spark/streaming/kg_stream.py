@@ -1,32 +1,24 @@
-"""Streaming KG maintenance: fold triple micro-batches into the snapshot
-catalog with exactly-once semantics.
+"""Micro-batch KG maintenance: fold a batch of extracted triples into the
+snapshot catalog, exactly once per batch id.
 
-A continuous crawl emits extracted triples as they land;
-``jobs/maintain_kg.py`` folds them batch-by-batch when someone runs it.
-This module is the always-on variant: a Structured Streaming query whose
-``foreachBatch`` sink aggregates each micro-batch into the edge-table
-schema and merges it into the live snapshot through the SAME production
-fold (``operators/graph.py::merge_edges``) and the SAME idempotent
-publish (``plans/catalog.py::write_snapshot``).
+``batch_edges`` aggregates one batch of triples into the edge-table
+schema; ``fold_batch`` returns a ``fold(batch_df, batch_id)`` function
+that merges that delta into the live snapshot through the production
+fold (``operators/graph.py::merge_edges``) and publishes it with the
+idempotent ``plans/catalog.py::write_snapshot``. Both are batch bodies:
+the caller decides when a batch is ready and which id it carries.
 
-Exactly-once without a transactional sink: the streaming checkpoint
-makes batch ids + contents deterministic on replay (source offsets are
-committed only after ``foreachBatch`` returns), and the publish is
-idempotent per ``run_id = <prefix>-<batch_id>`` — after a crash BETWEEN
-the merge landing and the offset commit, the re-run re-executes the same
-batch id, ``write_snapshot`` finds the run_id inside its publish lock,
-and skips the re-merge. The classic double-apply is structurally
-impossible; tests/test_streaming_kg.py replays a batch to prove it.
+Exactly once: the publish is idempotent per ``run_id =
+<prefix>-<batch_id>``. Folding the same batch id a second time (a
+replay after a crash between the publish and the caller's own
+bookkeeping) finds the run_id already published and skips the merge,
+so a batch cannot be applied twice; tests/test_streaming_kg.py replays
+one to check it.
 
 Correctness contract (same as jobs/maintain_kg.py): batches must be
-doc-disjoint — each docid's triples arrive in exactly one micro-batch
-(true for a crawl where a docid is emitted once; re-crawls go through
-the streaming dedup in streaming/stateful.py first). Under it,
-fold(fold(S0, A), B) == build(A ∪ B) for every edge statistic, which is
-what the test asserts against a single-shot batch build.
-
-No reference counterpart (the reference is strictly batch); this is the
-Structured-Streaming extension of the O34 sink + maintain_kg merge.
+doc-disjoint, i.e. each docid's triples arrive in exactly one batch.
+Under it, fold(fold(S0, A), B) == build(A ∪ B) for every edge statistic,
+which the tests assert against a single-shot batch build.
 """
 
 from __future__ import annotations
@@ -38,8 +30,8 @@ from pyspark.sql import functions as F
 def batch_edges(triples: DataFrame) -> DataFrame:
     """Aggregate one micro-batch of (docid, subj, rel, obj, score) rows
     into the merge_edges schema. Scores are rounded to 9 dp exactly as
-    ``operators/graph.py::build_edges`` does, so streamed folds and
-    batch rebuilds agree to the documented tolerance."""
+    ``operators/graph.py::build_edges`` does, so folds and batch
+    rebuilds agree to the documented tolerance."""
     return triples.groupBy(
         F.col("subj").alias("subj_id"),
         F.col("obj").alias("obj_id"),
@@ -55,11 +47,9 @@ def batch_edges(triples: DataFrame) -> DataFrame:
 
 
 def fold_batch(catalog, table: str, run_prefix: str = "stream"):
-    """Return the ``foreachBatch`` function closing over the catalog.
-
-    Exposed separately so tests (and a crash-recovery operator) can
-    replay a (df, batch_id) pair directly and observe the idempotent
-    skip."""
+    """Return ``fold(batch_df, batch_id)``, closing over the catalog: it
+    folds one batch into ``table`` and publishes it as run
+    ``<run_prefix>-<batch_id>``, or skips a batch id already published."""
     from deepex_spark.operators.graph import merge_edges
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -84,25 +74,3 @@ def fold_batch(catalog, table: str, run_prefix: str = "stream"):
         catalog.write_snapshot(merged, table, run_id=run_id)
 
     return fold
-
-
-def stream_kg_maintenance(
-    triples_stream: DataFrame,
-    catalog,
-    table: str,
-    checkpoint_dir: str,
-    run_prefix: str = "stream",
-    available_now: bool = True,
-):
-    """Wire a streaming triples DataFrame into the catalog fold and
-    return the started ``StreamingQuery``. ``available_now=True`` drains
-    whatever has landed and stops (the cron-style incremental run);
-    ``False`` runs continuously with the default trigger."""
-    writer = (
-        triples_stream.writeStream.foreachBatch(fold_batch(catalog, table, run_prefix))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,21 +1,14 @@
-"""Streaming sessionization via Spark's native session windows.
+"""Gap sessionization via Spark's native session windows.
 
-The batch operator (``operators/curate.py::sessionize``) is a lag +
-conditional-cumsum window; its streaming twin is ``F.session_window`` —
-Spark's built-in merging event-time session window, which supports
-watermarked state eviction and therefore runs unbounded. The two agree
-exactly: ``session_window`` merges an event into the open session when
-its gap to the session's last event is <= the gap duration (probed:
-a gap of exactly ``gap`` merges, ``gap + 1us`` splits), the same
-inclusive boundary the batch op uses — pinned cross-engine by the
-``events_session_window`` oracle (queries.py), which re-derives the
-window bounds from the first-principles lag-cumsum in DuckDB SQL.
-
-Scale: session-window state is per (user, open-session) and the
-watermark closes + emits sessions whose end precedes it, so state is
-bounded by active users within the watermark horizon — the standard
-Structured Streaming sessionization design (no custom state store code,
-no ``applyInPandasWithState`` needed for plain gap sessions).
+``session_agg`` groups events by (user, ``F.session_window``), Spark's
+built-in merging event-time session window. It agrees exactly with the
+lag + conditional-cumsum sessionization in
+``operators/curate.py::sessionize``: ``session_window`` merges an event
+into the open session when its gap to the session's last event is <= the
+gap duration (probed: a gap of exactly ``gap`` merges, ``gap + 1us``
+splits), the same inclusive boundary. The ``events_session_window``
+oracle (queries.py) pins this cross-engine by re-deriving the window
+bounds from the first-principles lag-cumsum in DuckDB SQL.
 """
 
 from __future__ import annotations
@@ -31,10 +24,10 @@ def session_agg(
     ts_col: str = "ts",
     value_col: str = "value",
 ) -> DataFrame:
-    """Shared batch/stream session aggregation: group by (user, merging
-    session window), emit ``(user_id, w_start, w_end, n_events,
-    total_value)``. ``w_end`` is the window end = last event + gap (the
-    session's expiry instant), not the last event itself."""
+    """Session aggregation: group by (user, merging session window),
+    emit ``(user_id, w_start, w_end, n_events, total_value)``. ``w_end``
+    is the window end = last event + gap (the session's expiry instant),
+    not the last event itself."""
     return (
         events.groupBy(user_col, F.session_window(ts_col, gap))
         .agg(
@@ -48,37 +41,4 @@ def session_agg(
             "n_events",
             "total_value",
         )
-    )
-
-
-def stream_sessionize(
-    events_stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Streaming sessionization: watermark bounds session state, the
-    session window merges late-but-in-horizon events into their session,
-    and a closed session emits exactly once (append mode). Same
-    aggregation body as the batch path — one code path, batch == stream.
-
-    ``withWatermark`` requires TIMESTAMP (an instant), not TIMESTAMP_NTZ,
-    so NTZ event time is cast in and the window bounds cast back — a
-    wall-time round trip that is the identity under any fixed session
-    timezone (only a DST fall-back overlap could alias two wall times,
-    and then only shifts which batch a session closes in, not its rows).
-    """
-    out = session_agg(
-        events_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withWatermark(
-            ts_col, watermark
-        ),
-        gap=gap,
-        user_col=user_col,
-        ts_col=ts_col,
-        value_col=value_col,
-    )
-    return out.withColumn("w_start", F.col("w_start").cast("timestamp_ntz")).withColumn(
-        "w_end", F.col("w_end").cast("timestamp_ntz")
     )

@@ -15,9 +15,9 @@ Correctness contract: batches must be doc-disjoint (the catalog resume
 manifest guarantees each docid is processed by exactly one run), under
 which ``merge(build(A), build(B)) == build(A ∪ B)`` for every vertex and
 edge statistic (pinned by tests/test_graph_merge.py). The merge itself is
-one groupBy per table on the entity/edge key — at scale both sides arrive
-bucketed by id (plans/bucketed.py) so the fold costs a partial
-aggregation, never a rebuild over old batches.
+one groupBy per table on the entity/edge key: the union of the live
+table and the delta is partially aggregated, then shuffled once, never
+rebuilt from old batches' triples.
 """
 
 from __future__ import annotations

@@ -43,10 +43,20 @@ def _cc_dict(spark, edges):
 
 def test_cc_chain_worst_diameter(spark):
     """A 64-vertex chain: naive min-propagation needs 63 rounds; pointer
-    jumping must collapse it within the operator's max_iter."""
+    jumping must collapse it within the operator's round cap."""
     edges = [(i, i + 1) for i in range(63)]
     got = _cc_dict(spark, edges)
     assert got == {v: 0 for v in range(64)}
+
+
+def test_cc_raises_when_round_cap_is_hit(spark, monkeypatch):
+    """Labels still changing when the cap runs out are an error, not a
+    result: one round cannot settle the 64-vertex chain."""
+    from deepex_spark.operators import graph
+
+    monkeypatch.setattr(graph, "CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge within 1 rounds"):
+        _cc_dict(spark, [(i, i + 1) for i in range(63)])
 
 
 def test_cc_matches_union_find_random(spark):

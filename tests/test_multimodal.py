@@ -86,84 +86,6 @@ def test_wav_media_through_spark_plumbing(spark):
         assert abs(sum(x * x for x in v) - 1.0) < 1e-5  # unit norm
 
 
-def test_streaming_available_now(spark, tmp_path):
-    import time
-
-    from deepex_spark.sources.pages import PAGES_SCHEMA, synth_page_rows
-    from deepex_spark.streaming.ingest import read_page_stream
-
-    src = tmp_path / "in"
-    out = tmp_path / "out"
-    chk = tmp_path / "chk"
-    spark.createDataFrame(synth_page_rows(20, seed=3), PAGES_SCHEMA).write.parquet(str(src))
-
-    stream = read_page_stream(spark, str(src))
-    assert stream.isStreaming
-    q = (
-        stream.selectExpr("url", "length(text) AS n")
-        .writeStream.format("parquet")
-        .option("path", str(out))
-        .option("checkpointLocation", str(chk))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(out))
-    assert got.count() == 20
-    # restart with no new files: exactly-once — no duplicate rows
-    q2 = (
-        read_page_stream(spark, str(src))
-        .selectExpr("url", "length(text) AS n")
-        .writeStream.format("parquet")
-        .option("path", str(out))
-        .option("checkpointLocation", str(chk))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(str(out)).count() == 20
-
-
-def test_windowed_event_counts_batch_semantics(spark):
-    # the windowed agg is testable on a batch frame (same expression)
-    import datetime as dt
-
-    from deepex_spark.streaming.ingest import windowed_event_counts
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [(base + dt.timedelta(minutes=i), "click") for i in range(25)]
-    df = spark.createDataFrame(rows, "ts timestamp, event_type string")
-    # watermark is a no-op in batch; windows still computed
-    out = {(r["window_start"].minute, r["n"]) for r in windowed_event_counts(df).collect()}
-    assert (0, 10) in out and (10, 10) in out and (20, 5) in out
-
-
-def test_stream_extract_foreachbatch(spark, tmp_path):
-    """stream_extract: full batch pipeline per micro-batch via foreachBatch
-    with Trigger.AvailableNow; output parquet holds ranked triples."""
-    from deepex_spark.config import DeepExConfig
-    from deepex_spark.sources.pages import PAGES_SCHEMA, synth_page_rows
-    from deepex_spark.streaming.ingest import read_page_stream, stream_extract
-
-    src = tmp_path / "pages_in"
-    out = tmp_path / "triples_out"
-    chk = tmp_path / "chk2"
-    spark.createDataFrame(synth_page_rows(6, seed=17), PAGES_SCHEMA).write.parquet(str(src))
-
-    cfg = DeepExConfig.task(dist_const=2)
-    q = stream_extract(read_page_stream(spark, str(src)), cfg, str(out), str(chk))
-    q.awaitTermination(180)
-    got = spark.read.parquet(str(out))
-    assert got.count() > 0
-    assert {"docid", "subj", "rel", "obj", "rank", "batch_id"} <= set(got.columns)
-    # batch output matches the batch pipeline on the same input (modulo
-    # batch_id): stream == batch, one code path
-    from deepex_spark.pipeline import extract_triples
-
-    batch = extract_triples(spark.read.parquet(str(src)), cfg)
-    assert batch.count() == got.count()
-
-
 def _raw_png_chunk(typ: bytes, data: bytes) -> bytes:
     """Hand-rolled chunk framing (length + type + data + crc32), kept
     independent of the production _png_chunk encoder on purpose."""
@@ -340,41 +262,3 @@ def test_bmp_avi_through_spark_plumbing(spark):
         for r in rows:
             assert bytes(r["frame_bytes"]) == exp[r["frame_idx"]]
             assert r["frame_checksum"] == zlib.crc32(exp[r["frame_idx"]])
-
-
-def test_stream_extract_derive_text(spark, tmp_path):
-    """derive_text=True in the streaming ingest renders text from raw
-    html per micro-batch — output equals the batch pipeline run over
-    the same pages with the same derivation (stream == batch, one code
-    path, including the ingest derivation)."""
-    from pyspark.sql import functions as F
-
-    from deepex_spark.config import DeepExConfig
-    from deepex_spark.operators.urls import html_to_text
-    from deepex_spark.pipeline import extract_triples
-    from deepex_spark.queries import _html_fixture_path
-    from deepex_spark.streaming.ingest import read_page_stream, stream_extract
-
-    src = tmp_path / "pages_in"
-    out = tmp_path / "triples_out"
-    chk = tmp_path / "chk3"
-    # blank the stored text so only the derivation can produce any
-    spark.read.parquet(_html_fixture_path()).limit(6).withColumn(
-        "text", F.lit("")
-    ).write.parquet(str(src))
-
-    cfg = DeepExConfig.task(dist_const=2, beam_size=2)
-    q = stream_extract(
-        read_page_stream(spark, str(src)), cfg, str(out), str(chk),
-        derive_text=True,
-    )
-    q.awaitTermination(180)
-    got = spark.read.parquet(str(out))
-    assert got.count() > 0
-    batch = extract_triples(
-        spark.read.parquet(str(src)).withColumn(
-            "text", html_to_text(F.col("html"))
-        ),
-        cfg,
-    )
-    assert batch.count() == got.count()

@@ -1,17 +1,11 @@
 """robots.txt grammar subset (operators/robots.py) vs a pure-Python
-mirror, plus designed verdicts and the frontier-filter plan shape."""
+mirror, plus designed verdicts and the verdict join's plan shape."""
 
 from __future__ import annotations
 
 import re
 
-import pyspark.sql.functions as F
-
-from deepex_spark.operators.robots import (
-    filter_frontier_robots,
-    parse_robots,
-    robots_verdict,
-)
+from deepex_spark.operators.robots import parse_robots, robots_verdict
 
 
 def _parse_py(txt: str):
@@ -105,11 +99,15 @@ def test_verdicts_match_designed_cases(spark):
         [(f"u{i}", "h.example", p) for i, p in enumerate(CASES)],
         "url string, host string, path string",
     )
-    out = {r["path"]: r["allowed"] for r in robots_verdict(urls, rules).collect()}
+    verdict = robots_verdict(urls, rules)
+    out = {r["path"]: r["allowed"] for r in verdict.collect()}
     py_rules = _parse_py(ROBOTS_TXT)
     for path, want in CASES.items():
         assert out[path] is want, path
         assert _verdict_py(py_rules, path) is want, ("mirror", path)
+    # the rule table is broadcast: the url side never shuffles
+    plan = verdict._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 def test_unknown_host_defaults_to_allowed(spark):
@@ -124,26 +122,3 @@ def test_unknown_host_defaults_to_allowed(spark):
     )
     rows = robots_verdict(urls, rules).collect()
     assert rows[0]["allowed"] is True and rows[0]["matched_prefix"] is None
-
-
-def test_frontier_filter_broadcasts_rules(spark):
-    frontier = spark.createDataFrame(
-        [
-            ("https://a.example/ok", "a.example", 3, 2),
-            ("https://a.example/blocked/x", "a.example", 9, 4),
-            ("https://b.example/anything", "b.example", 1, 1),
-        ],
-        "dst_canon string, dst_host string, n_inlinks long, n_src_hosts long",
-    )
-    robots = spark.createDataFrame(
-        [("a.example", "User-agent: *\nDisallow: /blocked/")],
-        "host string, robots_txt string",
-    )
-    out = filter_frontier_robots(frontier, robots)
-    assert sorted(r["dst_canon"] for r in out.collect()) == [
-        "https://a.example/ok",
-        "https://b.example/anything",
-    ]
-    assert set(out.columns) == set(frontier.columns)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan

@@ -1,13 +1,10 @@
-"""Streaming KG maintenance (streaming/kg_stream.py): micro-batch folds
-into the snapshot catalog equal the single-shot batch build, survive a
-restart (checkpoint offsets), and never double-apply a replayed batch
-(idempotent run_id publish)."""
+"""Micro-batch KG maintenance (streaming/kg_stream.py): folding
+doc-disjoint batches into the snapshot catalog equals the single-shot
+batch build, and a replayed batch id is never applied twice (idempotent
+run_id publish)."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -37,26 +34,6 @@ BATCH_B = [
     (3, "ada", "wrote", "notes", 1.0),
     (4, "grace", "built", "compiler", 5.0),
 ]
-
-
-def _write_batch(spark, src, rows, name):
-    spark.createDataFrame(rows, TRIPLES_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    # one file per phase is enough; availableNow drains all present files
-
-
-def _drain(spark, src, chk, catalog, table):
-    from deepex_spark.streaming.kg_stream import stream_kg_maintenance
-
-    stream = (
-        spark.readStream.schema(TRIPLES_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = stream_kg_maintenance(stream, catalog, table, str(chk))
-    q.awaitTermination(180)
-    q.stop()
 
 
 def _edges(spark, catalog, table):
@@ -89,20 +66,19 @@ def _batch_build(spark, rows):
     }
 
 
-def test_stream_fold_equals_batch_build_across_restart(spark, tmp_path):
+def test_fold_equals_batch_build(spark, tmp_path):
+    """fold(fold(S0, A), B) == build(A ∪ B): batch 0 over an empty
+    catalog gives build(A); batch 1 folds B into it."""
     from deepex_spark.plans.catalog import Catalog
+    from deepex_spark.streaming.kg_stream import fold_batch
 
-    src, chk = tmp_path / "in", tmp_path / "chk"
-    os.makedirs(src, exist_ok=True)
     catalog = Catalog(str(tmp_path / "wh"), spark=spark)
+    fold = fold_batch(catalog, "edges")
 
-    _write_batch(spark, src, BATCH_A, "a")
-    _drain(spark, src, chk, catalog, "edges")
+    fold(spark.createDataFrame(BATCH_A, TRIPLES_SCHEMA), 0)
     assert _edges(spark, catalog, "edges") == _batch_build(spark, BATCH_A)
 
-    # restart: NEW query, same checkpoint — only batch B is folded
-    _write_batch(spark, src, BATCH_B, "b")
-    _drain(spark, src, chk, catalog, "edges")
+    fold(spark.createDataFrame(BATCH_B, TRIPLES_SCHEMA), 1)
     assert _edges(spark, catalog, "edges") == _batch_build(
         spark, BATCH_A + BATCH_B
     )

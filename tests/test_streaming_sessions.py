@@ -1,115 +1,30 @@
-"""Streaming sessionization (streaming/sessions.py): the native
-session_window path in complete and append (watermark-emission) modes.
-Cross-engine boundary semantics are pinned by the events_session_window
-oracle; these tests cover the streaming machinery itself."""
+"""Gap sessionization (streaming/sessions.py::session_agg) on known
+values. Cross-engine boundary semantics are pinned by the
+events_session_window oracle."""
 
-import os
-import time
 from datetime import datetime, timedelta
 
-from pyspark.sql import functions as F
-
-from deepex_spark.streaming.sessions import session_agg, stream_sessionize
+from deepex_spark.streaming.sessions import session_agg
 
 SCHEMA = "event_id long, ts timestamp_ntz, user_id long, value double"
 T0 = datetime(2024, 1, 1, 0, 0, 0)
 
 
-def _write(spark, rows, path):
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def test_complete_mode_equals_batch(spark, tmp_path):
+def test_session_agg_known_values(spark):
     rows = [
         (1, T0, 1, 1.0),
         (2, T0 + timedelta(minutes=10), 1, 2.0),
         (3, T0 + timedelta(hours=5), 1, 4.0),
         (4, T0 + timedelta(minutes=3), 2, 8.0),
     ]
-    src = str(tmp_path / "src")
-    _write(spark, rows, src)
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = (
-        session_agg(stream, gap="30 minutes")
-        .writeStream.format("memory")
-        .queryName("sess_complete")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
     got = {
-        (r["user_id"], r["w_start"], r["w_end"], r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM sess_complete").collect()
-    }
-    batch = {
         (r["user_id"], r["w_start"], r["w_end"], r["n_events"], r["total_value"])
         for r in session_agg(spark.createDataFrame(rows, SCHEMA), gap="30 minutes").collect()
     }
-    assert got == batch
-    assert (1, T0, T0 + timedelta(minutes=40), 2, 3.0) in got
-
-
-def test_append_mode_emits_only_watermark_closed_sessions(spark, tmp_path):
-    src = str(tmp_path / "src2")
-    os.makedirs(src)
-    # batch 1: user 1's session on day 1, plus a day-3 event that drags the
-    # watermark past the day-1 session's end
-    _write(spark, [(1, T0, 1, 1.0), (2, T0 + timedelta(days=2), 2, 1.0)], src + "/f1")
-    time.sleep(1.1)  # file source orders batches by modification time
-    # batch 2: far-future event drags the final watermark to day 30 —
-    # every earlier session closes and emits, but the day-30 session
-    # itself stays open in state (nothing past it), proving emission is
-    # watermark-gated rather than flush-everything
-    _write(spark, [(3, T0 + timedelta(days=30), 3, 1.0)], src + "/f2")
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-    )
-    q = (
-        stream_sessionize(stream, gap="30 minutes", watermark="0 seconds")
-        .writeStream.format("memory")
-        .queryName("sess_append")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {tuple(r) for r in spark.sql("SELECT * FROM sess_append").collect()}
+    # events 1 and 2 are 10 minutes apart: one session, ending 30
+    # minutes after its last event; event 3 opens a second one
     assert got == {
-        (1, T0, T0 + timedelta(minutes=30), 1, 1.0),
-        (2, T0 + timedelta(days=2), T0 + timedelta(days=2, minutes=30), 1, 1.0),
+        (1, T0, T0 + timedelta(minutes=40), 2, 3.0),
+        (1, T0 + timedelta(hours=5), T0 + timedelta(hours=5, minutes=30), 1, 4.0),
+        (2, T0 + timedelta(minutes=3), T0 + timedelta(minutes=33), 1, 8.0),
     }
-
-
-def test_dedup_within_watermark(spark, tmp_path):
-    """Native streaming dedup: duplicate keys within the watermark horizon
-    drop; state evicts as the watermark advances."""
-    from deepex_spark.streaming.stateful import dedup_within_watermark
-
-    rows = [
-        (1, T0, 10, 1.0),
-        (2, T0 + timedelta(minutes=5), 10, 2.0),   # dup of user 10 in-horizon
-        (3, T0 + timedelta(minutes=9), 11, 3.0),
-        (4, T0 + timedelta(minutes=2), 10, 4.0),   # another in-horizon dup
-    ]
-    src = str(tmp_path / "dsrc")
-    _write(spark, rows, src)
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    typed = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        dedup_within_watermark(typed, ["user_id"], watermark="1 hour")
-        .writeStream.format("memory")
-        .queryName("dedup_wm")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {(r["user_id"], r["event_id"]) for r in spark.sql("SELECT * FROM dedup_wm").collect()}
-    # one survivor per user within the horizon (first arrival in batch order)
-    assert {u for u, _ in got} == {10, 11} and len(got) == 2
