@@ -180,6 +180,33 @@ def merge_edges(existing: DataFrame, delta: DataFrame, run_id: str = "merge") ->
     )
 
 
+def fixpoint(state: DataFrame, step, probe, max_rounds: int, value=None):
+    """Run ``state = step(state)`` until ``probe`` reports convergence or
+    ``max_rounds`` rounds have run -> ``(state, converged)``; the loop of
+    connected_components, kcore and ``sparql.path_closure``.
+
+    Each round's new state is eagerly ``localCheckpoint``-ed before the
+    probe runs, so the plan never grows with the round count and AQE
+    plans the next round from the sizes the checkpoint observed.
+    ``probe(new, old, value)`` returns ``(value, done)``: ``value`` goes
+    to the next round's probe (the argument seeds the first), so a count
+    probe never counts a state twice; ``done`` ends the loop."""
+    for _ in range(max_rounds):
+        new = step(state).localCheckpoint(eager=True)
+        value, done = probe(new, state, value)
+        state = new
+        if done:
+            return state, True
+    return state, False
+
+
+def count_probe(new: DataFrame, old: DataFrame, n_old) -> tuple:
+    """``fixpoint`` probe for a state that only grows or only shrinks: an
+    unchanged row count means an unchanged row set."""
+    n_new = new.count()
+    return n_new, n_new == n_old
+
+
 # round cap for connected_components: pointer jumping makes the round
 # count O(log diameter), so the loop reaches its fixpoint long before
 # this. The cap only stops a runaway, and raises rather than returning
@@ -228,7 +255,8 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     labels = sym.select("u").distinct().withColumn("comp", F.col("u"))
-    for _ in range(CC_MAX_ROUNDS):
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr = (
             sym.join(labels, on="u")
             .groupBy(F.col("v").alias("u"))
@@ -239,27 +267,27 @@ def connected_components(
             F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
         )
         hop = prop.select(F.col("u").alias("c_u"), F.col("comp").alias("c_comp"))
-        jumped = (
-            prop.join(hop, prop["comp"] == hop["c_u"], "left")
-            .select(
-                "u",
-                F.least(F.col("comp"), F.coalesce("c_comp", F.col("comp"))).alias("comp"),
-            )
-            .localCheckpoint(eager=True)
+        return prop.join(hop, prop["comp"] == hop["c_u"], "left").select(
+            "u",
+            F.least(F.col("comp"), F.coalesce("c_comp", F.col("comp"))).alias("comp"),
         )
+
+    def unchanged(new: DataFrame, old: DataFrame, _) -> tuple:
         changed = (
-            jumped.alias("n")
-            .join(labels.alias("o"), "u")
+            new.alias("n")
+            .join(old.alias("o"), "u")
             .where(F.col("n.comp") != F.col("o.comp"))
             .limit(1)
             .count()
         )
-        labels = jumped
-        if changed == 0:
-            return labels.select(F.col("u").alias("v"), "comp")
-    raise RuntimeError(
-        f"connected_components did not converge within {CC_MAX_ROUNDS} rounds"
-    )
+        return None, changed == 0
+
+    labels, converged = fixpoint(labels, step, unchanged, CC_MAX_ROUNDS)
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge within {CC_MAX_ROUNDS} rounds"
+        )
+    return labels.select(F.col("u").alias("v"), "comp")
 
 
 def khop_distances(
@@ -566,23 +594,20 @@ def kcore(
     # upstream (e.g. a co-occurrence self-join) for each of its three
     # consumers (both degree scans + the filter join)
     live = _undirected(edges, src, dst).localCheckpoint(eager=True)
-    n_live = live.count()
-    for _ in range(n_rounds):
+
+    def peel(live: DataFrame) -> DataFrame:
         keep = _degrees(live).where(F.col("deg") >= k).select("x")
         ka, kb = keep.alias("ka"), keep.alias("kb")
-        live = (
+        return (
             live.join(ka, live["a"] == F.col("ka.x"))
             .join(kb, live["b"] == F.col("kb.x"))
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
-        n_new = live.count()
-        if n_new == n_live:
-            # peeling is removal-only, so an unchanged edge COUNT means an
-            # unchanged edge SET: every remaining fixed round is a no-op
-            # and the result is identical to running all n_rounds
-            break
-        n_live = n_new
+
+    # peeling is removal-only, so an unchanged edge COUNT means an
+    # unchanged edge SET: every remaining fixed round is a no-op and the
+    # early exit returns exactly what all n_rounds would
+    live, _ = fixpoint(live, peel, count_probe, n_rounds, live.count())
     return _degrees(live).select(
         F.col("x").alias("entity_id"), F.col("deg").alias("core_deg")
     )

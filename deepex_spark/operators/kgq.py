@@ -15,10 +15,11 @@ propagating ontology types is what makes the output a usable KG:
   trust-weighted re-vote. Votes are summed as ``round(trust·10^6)``
   BIGINTs so the re-vote is integer-exact and summation order (which
   differs across engines/partitionings) can never flip a ranking.
-* ``subclass_closure`` / ``type_extension`` — transitive ``subClassOf``
-  closure by path doubling (log2(depth) self-joins, NOT depth-many
-  driver rounds) and the inferred per-type extension counts
-  (rdfs:subClassOf + rdf:type entailment).
+* ``subclass_closure`` / ``type_extension`` — the exact transitive
+  ``subClassOf`` closure (``sparql.path_closure``: path doubling to a
+  fixpoint, log2(depth) self-joins, NOT depth-many driver rounds) and
+  the inferred per-type extension counts (rdfs:subClassOf + rdf:type
+  entailment).
 
 Scale notes (100 TB): every operator keys its shuffles once —
 ``conflict_report`` is ONE subject exchange end-to-end (the claim
@@ -35,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from deepex_spark.operators.sparql import path_closure
 
 _TRUST_SCALE = 1_000_000  # trust quantum: round(trust·1e6) as BIGINT
 
@@ -388,27 +391,21 @@ def link_prediction_eval(
     )
 
 
-def subclass_closure(edges: DataFrame, rounds: int = 2) -> DataFrame:
-    """Transitive closure of ``subClassOf`` edges ``(child, anc)`` by
-    path DOUBLING: after round k every path of length ≤ 2^(k+1) is
-    present, so ``rounds = ceil(log2(max_depth))`` — an ontology 1000
-    levels deep needs 10 self-joins, not 1000 driver iterations. The
-    ontology is tiny next to the instance data; each round is one
-    equi-join + distinct over it."""
-    c = edges.select("child", "anc").distinct()
-    for _ in range(rounds):
-        step = (
-            c.alias("a")
-            .join(c.alias("b"), F.col("a.anc") == F.col("b.child"))
-            .select(F.col("a.child").alias("child"), F.col("b.anc").alias("anc"))
-        )
-        c = c.unionByName(step).distinct()
-    return c
+def subclass_closure(edges: DataFrame) -> DataFrame:
+    """Transitive closure of ``subClassOf`` edges ``(child, anc)``: the
+    exact path-doubling fixpoint of ``sparql.path_closure`` (k rounds
+    reach paths of length 2^k, so an ontology 1000 levels deep needs 10
+    self-joins, not 1000 driver iterations). The ontology is tiny next to
+    the instance data; each round is one equi-join + distinct over it."""
+    pairs = edges.select(
+        F.col("child").alias("__ps"), F.col("anc").alias("__po")
+    ).distinct()
+    return path_closure(pairs).select(
+        F.col("__ps").alias("child"), F.col("__po").alias("anc")
+    )
 
 
-def type_extension(
-    edges: DataFrame, typing: DataFrame, rounds: int = 2
-) -> DataFrame:
+def type_extension(edges: DataFrame, typing: DataFrame) -> DataFrame:
     """RDFS entailment counts: for every type node, the number of proper
     descendant types (``n_subtypes``), directly-asserted instances
     (``n_direct``), and instances in the INFERRED extension — direct or
@@ -419,7 +416,7 @@ def type_extension(
     exactly one broadcast join against the (tiny, reflexive-extended)
     closure, then one type-keyed aggregate — no instance self-join ever
     happens."""
-    clo = subclass_closure(edges, rounds=rounds)
+    clo = subclass_closure(edges)
     nodes = (
         clo.select(F.col("child").alias("type_id"))
         .unionByName(clo.select(F.col("anc").alias("type_id")))

@@ -157,10 +157,11 @@ Compilation (:func:`bgp`), and why it scales:
   step's solution PAIR SET instead of a scan: the predicate constant
   filters the scan first (pushed to parquet — the closure runs over one
   predicate's edge set, never the whole table), ``+``/``*`` close the
-  pair set EXACTLY by path DOUBLING to a fixpoint (``log2(diameter)``
-  eager self-join+distinct rounds with ``localCheckpoint`` lineage
-  truncation and a count convergence probe — the same iterative shape
-  as ``graph.connected_components``), and ``*``/``?`` union the
+  pair set EXACTLY by path DOUBLING to a fixpoint (``path_closure``:
+  ``log2(diameter)`` eager self-join+distinct rounds through
+  ``graph.fixpoint``, the loop ``connected_components`` and ``kcore``
+  also run, with a count convergence probe; a path still growing after
+  ``CLOSURE_ROUNDS`` rounds raises), and ``*``/``?`` union the
   zero-length pairs (every graph node to itself). Distinct pairs ==
   SPARQL 1.1's connectivity semantics, which is also what terminates on
   cycles. The pair set then joins into the left-deep tree like any
@@ -231,12 +232,15 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepex_spark.operators.graph import count_probe, fixpoint
+
 __all__ = [
     "parse_bgp",
     "bgp",
     "construct",
     "ask",
     "describe",
+    "path_closure",
     "BGPQuery",
     "Pattern",
     "Filter",
@@ -1184,23 +1188,23 @@ def _agg_expr(func: str, var: str | None, sep: str = " "):
 CLOSURE_ROUNDS = 16
 
 
-def _path_closure(pairs: DataFrame, rounds: int) -> DataFrame:
+def path_closure(pairs: DataFrame) -> DataFrame:
     """EXACT transitive closure of a distinct (``__ps``, ``__po``) pair
     set by path DOUBLING: after round k every pair connected by a path
     of length <= 2**k is present, so an ontology 1000 levels deep
     converges in 10 rounds, not 1000 driver iterations. Each round is
     one equi-join + distinct over the (predicate-filtered, usually
     small) pair set; ``distinct`` gives SPARQL 1.1's connectivity (set)
-    semantics, which is also what terminates on cycles. Rounds run
-    eagerly with ``localCheckpoint`` lineage truncation and a pair-count
-    convergence probe — without the checkpoint the self-referencing plan
-    triples per round and the OPTIMIZER, not the data, becomes the
-    bottleneck (same iterative pattern as graph.connected_components;
-    the closure shares its compile technique with kgq.subclass_closure).
+    semantics, which is also what terminates on cycles. The rounds run
+    through ``graph.fixpoint`` with a pair-count probe — without its
+    checkpoint the self-referencing plan triples per round and the
+    OPTIMIZER, not the data, becomes the bottleneck. The one closure of
+    the code base: the ``+``/``*`` compile and ``kgq.type_extension``'s
+    subClassOf closure both run it.
     """
     c = pairs.localCheckpoint(eager=True)
-    n = c.count()
-    for _ in range(rounds):
+
+    def double(c: DataFrame) -> DataFrame:
         step = (
             c.select(F.col("__ps").alias("__s1"), F.col("__po").alias("__m"))
             .join(
@@ -1209,21 +1213,18 @@ def _path_closure(pairs: DataFrame, rounds: int) -> DataFrame:
             )
             .select(F.col("__s1").alias("__ps"), F.col("__o2").alias("__po"))
         )
-        nxt = c.unionByName(step).distinct().localCheckpoint(eager=True)
-        m = nxt.count()
-        if m == n:
-            # fixpoint: no new pair appeared, the closure is complete
-            return c
-        c, n = nxt, m
-    raise RuntimeError(
-        f"path closure did not converge within {rounds} doubling rounds "
-        f"(depth 2**{rounds}); raise bgp(closure_rounds=...)"
-    )
+        return c.unionByName(step).distinct()
+
+    c, converged = fixpoint(c, double, count_probe, CLOSURE_ROUNDS, c.count())
+    if not converged:
+        raise RuntimeError(
+            f"path closure did not converge within {CLOSURE_ROUNDS} doubling "
+            f"rounds (depth 2**{CLOSURE_ROUNDS})"
+        )
+    return c
 
 
-def _closure_pairs(
-    edges: DataFrame, p: Pattern, cols: tuple, rounds: int
-) -> DataFrame:
+def _closure_pairs(edges: DataFrame, p: Pattern, cols: tuple) -> DataFrame:
     """A modified path step ``<r>+ / <r>* / <r>?`` -> its solution pair
     set (``__ps``, ``__po``). The predicate constant (or alternation
     member set) filters the scan FIRST — the closure runs over one
@@ -1274,7 +1275,7 @@ def _closure_pairs(
             .distinct()
         )
     if p.pred_mod in ("+", "*"):
-        pairs = _path_closure(pairs, rounds)
+        pairs = path_closure(pairs)
     if p.pred_mod in ("*", "?"):
         nodes = (
             edges.select(F.col(src).alias("__n"))
@@ -1286,16 +1287,14 @@ def _closure_pairs(
     return pairs
 
 
-def _pattern_df(
-    edges: DataFrame, p: Pattern, cols: tuple, closure_rounds: int = CLOSURE_ROUNDS
-) -> DataFrame:
+def _pattern_df(edges: DataFrame, p: Pattern, cols: tuple) -> DataFrame:
     """One triple pattern -> (filtered, variable-renamed) projection.
     A path-modified pattern (``pred_mod``) resolves to its closure pair
     set first; endpoint constants/variables then apply to the pairs
     exactly as they would to a plain scan."""
     src, rel, dst = cols
     if p.pred_mod is not None:
-        df = _closure_pairs(edges, p, cols, closure_rounds)
+        df = _closure_pairs(edges, p, cols)
         positions = [("__ps", p.subj, p.subj_var), ("__po", p.obj, p.obj_var)]
     else:
         df = edges
@@ -1334,14 +1333,13 @@ def bgp(
     query: str | BGPQuery,
     cols: tuple = ("src", "rel", "dst"),
     allow_product: bool = False,
-    closure_rounds: int = CLOSURE_ROUNDS,
 ) -> DataFrame:
     """Run a BGP query against an edge DataFrame.
 
     ``cols`` names the (subject, predicate, object) columns. Returns a
     DataFrame whose columns are the SELECT variables, in SELECT order.
-    ``closure_rounds`` caps the ``+``/``*`` fixpoint loop at 2**rounds
-    path depth (default 65536) — see :func:`_path_closure`.
+    A ``+``/``*`` path that has not closed after ``CLOSURE_ROUNDS``
+    doubling rounds (depth 2**16) raises — see :func:`path_closure`.
     """
     q = parse_bgp(query) if isinstance(query, str) else query
     if q.unions:
@@ -1350,7 +1348,7 @@ def bgp(
         # exchange: union is plan concatenation.
         acc, bound = None, set()
         for br in q.unions:
-            gdf, gb = _solve(edges, br.patterns, br.filters, cols, allow_product, closure_rounds)
+            gdf, gb = _solve(edges, br.patterns, br.filters, cols, allow_product)
             acc = gdf if acc is None else acc.unionByName(
                 gdf, allowMissingColumns=True
             )
@@ -1365,14 +1363,14 @@ def bgp(
         )
         solve_filters = [f for f in q.filters if not (f.variables() & late_vars)]
         post_filters = [f for f in q.filters if f.variables() & late_vars]
-        acc, bound = _solve(edges, q.patterns, solve_filters, cols, allow_product, closure_rounds)
+        acc, bound = _solve(edges, q.patterns, solve_filters, cols, allow_product)
         for sq in q.subqueries:
             # bottom-up (SPARQL 1.1 §12): the subquery solves as a full
             # query of its own — aggregates, DISTINCT, ORDER/LIMIT
             # included — then inner-joins the outer solution on the
             # shared projected variables. An aggregated subquery is
             # group-compact, so AQE picks a broadcast join when small.
-            sdf = bgp(edges, sq, cols, allow_product, closure_rounds)
+            sdf = bgp(edges, sq, cols, allow_product)
             keys = sorted(set(_subq_out_vars(sq)) & bound)
             acc = acc.join(sdf, on=keys, how="inner")
             bound |= set(_subq_out_vars(sq))
@@ -1396,7 +1394,7 @@ def bgp(
         # anti-join on the shared variables: drop every required-side row
         # for which the negation group has at least one solution. Runs
         # BEFORE optional joins, so it only ever tests never-null vars.
-        gdf, _ = _solve(edges, g.patterns, g.filters, cols, allow_product, closure_rounds)
+        gdf, _ = _solve(edges, g.patterns, g.filters, cols, allow_product)
         keys = sorted(g.variables() & bound)
         acc = acc.join(gdf.select(*keys), on=keys, how="left_anti")
     for g in q.exists_groups:
@@ -1404,7 +1402,7 @@ def bgp(
         # its bindings. LeftSemi short-circuits on first build-side match
         # and never widens the row — AQE picks broadcast vs shuffle, the
         # group's solution count never multiplies the required side.
-        gdf, _ = _solve(edges, g.patterns, g.filters, cols, allow_product, closure_rounds)
+        gdf, _ = _solve(edges, g.patterns, g.filters, cols, allow_product)
         keys = sorted(g.variables() & bound)
         acc = acc.join(gdf.select(*keys), on=keys, how="left_semi")
     for g in q.optionals:
@@ -1412,7 +1410,7 @@ def bgp(
         # pre-filter the optional side), then LEFT-joined to the solution
         # on the shared variables — unmatched rows keep NULLs, SPARQL's
         # OPTIONAL semantics for this subset
-        gdf, _ = _solve(edges, g.patterns, g.filters, cols, allow_product, closure_rounds)
+        gdf, _ = _solve(edges, g.patterns, g.filters, cols, allow_product)
         keys = sorted(g.variables() & bound)
         acc = acc.join(gdf, on=keys, how="left")
         bound |= g.variables()
@@ -1471,7 +1469,6 @@ def _solve(
     filters: list,
     cols: tuple,
     allow_product: bool,
-    closure_rounds: int = CLOSURE_ROUNDS,
 ):
     """Left-deep join of one pattern group; returns (df, bound vars)."""
     # most-constant-first, stable on author order; a closure pattern
@@ -1504,7 +1501,7 @@ def _solve(
 
     remaining = list(order)
     first = remaining.pop(0)
-    acc = _pattern_df(edges, patterns[first], cols, closure_rounds)
+    acc = _pattern_df(edges, patterns[first], cols)
     bound = set(patterns[first].variables())
     acc = apply_ready_filters(acc, bound)
     while remaining:
@@ -1521,7 +1518,7 @@ def _solve(
                 )
             idx = 0
         i = remaining.pop(idx)
-        pdf = _pattern_df(edges, patterns[i], cols, closure_rounds)
+        pdf = _pattern_df(edges, patterns[i], cols)
         keys = sorted(patterns[i].variables() & bound)
         acc = acc.join(pdf, on=keys, how="inner") if keys else acc.crossJoin(pdf)
         bound |= patterns[i].variables()

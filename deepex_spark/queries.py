@@ -15,6 +15,7 @@ and a single-node local oracle instead (SURVEY.md §5).
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -22,6 +23,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from deepex_spark.config import DeepExConfig
+
+
+def _fixture(name: str) -> str:
+    """Absolute path of a committed file under the repo's ``fixtures/``."""
+    return os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures", name
+    )
+
 
 # importing the kernel here builds the native extension ONCE, driver-side,
 # at registry-import time (flock-guarded, no-op when the .so exists) — on
@@ -1512,11 +1521,12 @@ def _next_chain_edges(spark, sf_dir):
 def kg_sparql_path_plus(spark, sf_dir):
     """Transitive one-or-more property path: ``?x <next>+ ?y`` over the
     per-customer order chain closes each chain to its full ordered pair
-    set. Compiled by operators/sparql.py's ``_path_closure`` — the
+    set. Compiled by operators/sparql.py's ``path_closure`` — the
     predicate filter reaches the scan first, then log2(diameter) eager
-    path-doubling rounds (localCheckpoint lineage truncation + count
-    convergence probe, the graph.connected_components iteration shape)
-    produce SPARQL 1.1's connectivity (set) semantics exactly. The
+    path-doubling rounds through ``graph.fixpoint`` (localCheckpoint
+    lineage truncation + count convergence probe, the loop
+    connected_components runs) produce SPARQL 1.1's connectivity (set)
+    semantics exactly. The
     implicit-grouping aggregate keeps the registered output compact
     while staying sensitive to every closure pair."""
     from deepex_spark.operators.sparql import bgp
@@ -3604,15 +3614,6 @@ def corpus_mix_rates(spark, sf_dir):
 # in operators/urls.py (not a golden of the engine's own output)
 # ---------------------------------------------------------------------------
 
-def _pages_fixture_path() -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "fixtures", "pages.parquet",
-    )
-
-
 def _canon_chain(prefix: str, from_sql: str, url_expr: str, carry: str) -> str:
     """Parameterized DuckDB CTE chain ``{prefix}0..{prefix}5, {prefix}``
     canonicalizing ``url_expr`` over ``FROM from_sql``: the final relation
@@ -3680,7 +3681,7 @@ def _url_canon_cte() -> str:
     """DuckDB CTE chain ending in relation c(url, warc_ts, canon_url, host)
     over the messy-URL pages fixture."""
     return "\n    WITH " + _canon_chain(
-        "c", f"read_parquet('{_pages_fixture_path()}')", "url", "url, warc_ts"
+        "c", f"read_parquet('{_fixture('pages.parquet')}')", "url", "url, warc_ts"
     )
 
 
@@ -3696,7 +3697,7 @@ def url_canonicalize(spark, sf_dir):
     sf-independent, like the multimodal trio."""
     from deepex_spark.operators.urls import canonicalize_urls
 
-    pages = spark.read.parquet(_pages_fixture_path())
+    pages = spark.read.parquet(_fixture("pages.parquet"))
     return canonicalize_urls(pages).select("url", "canon_url", "host")
 
 
@@ -3720,7 +3721,7 @@ def crawl_keep_newest(spark, sf_dir):
     processing so re-fetches of one logical page aren't processed twice."""
     from deepex_spark.operators.urls import crawl_snapshot
 
-    pages = spark.read.parquet(_pages_fixture_path())
+    pages = spark.read.parquet(_fixture("pages.parquet"))
     return crawl_snapshot(pages)
 
 
@@ -3744,7 +3745,7 @@ def crawl_host_stats(spark, sf_dir):
     set from."""
     from deepex_spark.operators.urls import host_stats
 
-    pages = spark.read.parquet(_pages_fixture_path())
+    pages = spark.read.parquet(_fixture("pages.parquet"))
     return host_stats(pages)
 
 
@@ -3756,21 +3757,8 @@ def crawl_host_stats(spark, sf_dir):
 # exactly (incl. per-member gzip offsets and a separator-embedded payload)
 # ---------------------------------------------------------------------------
 
-def _warc_fixture_dir() -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "fixtures", "warc",
-    )
-
-
 def _warc_expected_oracle() -> str:
-    import os
-
-    path = os.path.join(
-        os.path.dirname(_warc_fixture_dir()), "warc_expected.parquet"
-    )
+    path = _fixture("warc_expected.parquet")
     return f"""
     SELECT url, warc_ts, http_status, mime, html_len, html_crc32,
            warc_name, warc_offset, warc_len
@@ -3786,7 +3774,7 @@ def warc_ingest(spark, sf_dir):
     canonicalization), lineage pinned by compressed member offsets."""
     from deepex_spark.sources.warc import read_warc
 
-    return read_warc(spark, _warc_fixture_dir()).select(
+    return read_warc(spark, _fixture("warc")).select(
         "url",
         "warc_ts",
         "http_status",
@@ -3804,11 +3792,7 @@ def _cdx_oracle() -> str:
     canonicalization CTE chain (same one the url_canonicalize oracle
     uses) feeds an independent SQL SURT — reversed host segments,
     non-default port re-appended, path+query carried as canonicalized."""
-    import os
-
-    path = os.path.join(
-        os.path.dirname(_warc_fixture_dir()), "warc_expected.parquet"
-    )
+    path = _fixture("warc_expected.parquet")
     chain = _canon_chain(
         "c",
         f"read_parquet('{path}')",
@@ -3850,7 +3834,7 @@ def warc_cdx_index(spark, sf_dir):
     the whole key from the writer-serialized truth rows."""
     from deepex_spark.sources.warc import cdx_index, read_warc
 
-    return cdx_index(read_warc(spark, _warc_fixture_dir()))
+    return cdx_index(read_warc(spark, _fixture("warc")))
 
 
 # ---------------------------------------------------------------------------
@@ -3858,15 +3842,6 @@ def warc_cdx_index(spark, sf_dir):
 # (tools/make_links_fixture.py), INDEPENDENT SQL re-derivation of the
 # extraction + resolution + canonicalization spec in operators/urls.py
 # ---------------------------------------------------------------------------
-
-def _links_fixture_path() -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "fixtures", "pages_links.parquet",
-    )
-
 
 def _outlinks_cte() -> str:
     """DuckDB CTE chain ending in relation edges(src_canon, src_host,
@@ -3877,7 +3852,7 @@ def _outlinks_cte() -> str:
     origin/dir join, same canonicalization of BOTH the source url and the
     resolved destination."""
     src = _canon_chain(
-        "s", f"read_parquet('{_links_fixture_path()}')", "url", "html"
+        "s", f"read_parquet('{_fixture('pages_links.parquet')}')", "url", "html"
     )
     dst = _canon_chain("d", "rs", "dst_abs", "src_canon, src_host")
     return rf"""
@@ -3955,7 +3930,7 @@ def _anchor_pairs_cte() -> str:
     alias normalization (explicit ASCII class; regexp_replace needs the
     'g' flag where Spark's is always-global)."""
     src = _canon_chain(
-        "s", f"read_parquet('{_links_fixture_path()}')", "url", "html"
+        "s", f"read_parquet('{_fixture('pages_links.parquet')}')", "url", "html"
     )
     dst = _canon_chain("d", "rs", "dst_abs", "src_canon, src_host, txt")
     dq = r"""'(?i)<a[\s][^>]*?href\s*=\s*"([^"]*)"[^>]*>([^<]*)'"""
@@ -3997,7 +3972,7 @@ def html_outlinks(spark, sf_dir):
     JVM regex + string algebra; the only exchange is the edge distinct."""
     from deepex_spark.operators.urls import extract_outlinks
 
-    pages = spark.read.parquet(_links_fixture_path())
+    pages = spark.read.parquet(_fixture("pages_links.parquet"))
     return extract_outlinks(pages)
 
 
@@ -4018,7 +3993,7 @@ def web_link_hostgraph(spark, sf_dir):
     One map-side-combined groupBy over the edge distinct."""
     from deepex_spark.operators.urls import extract_outlinks, host_link_graph
 
-    pages = spark.read.parquet(_links_fixture_path())
+    pages = spark.read.parquet(_fixture("pages_links.parquet"))
     return host_link_graph(extract_outlinks(pages))
 
 
@@ -4042,17 +4017,8 @@ def crawl_frontier_query(spark, sf_dir):
     join sides key on canon_url (url-hash partitionable at scale)."""
     from deepex_spark.operators.urls import crawl_frontier
 
-    pages = spark.read.parquet(_links_fixture_path())
+    pages = spark.read.parquet(_fixture("pages_links.parquet"))
     return crawl_frontier(pages)
-
-
-def _robots_fixture_path() -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "fixtures", "robots.parquet",
-    )
 
 
 def _robots_oracle() -> str:
@@ -4062,7 +4028,7 @@ def _robots_oracle() -> str:
     prefixes -> longest-match (allow on ties) verdict per distinct
     canonical url."""
     chain = _canon_chain(
-        "c", f"read_parquet('{_pages_fixture_path()}')", "url", "url"
+        "c", f"read_parquet('{_fixture('pages.parquet')}')", "url", "url"
     )
     return rf"""
     WITH {chain},
@@ -4081,7 +4047,7 @@ def _robots_oracle() -> str:
       SELECT host AS rhost,
              unnest(generate_series(1, len(string_split(robots_txt, chr(10))))) AS ln,
              unnest(string_split(robots_txt, chr(10))) AS raw
-      FROM read_parquet('{_robots_fixture_path()}')
+      FROM read_parquet('{_fixture("robots.parquet")}')
     ),
     lns AS (
       SELECT rhost, ln,
@@ -4151,7 +4117,7 @@ def crawl_robots_filter(spark, sf_dir):
     from deepex_spark.operators.robots import parse_robots, robots_verdict
     from deepex_spark.operators.urls import normalize_url, url_host
 
-    pages = spark.read.parquet(_pages_fixture_path())
+    pages = spark.read.parquet(_fixture("pages.parquet"))
     canon = pages.select(
         "url", normalize_url(F.col("url")).alias("canon_url")
     ).distinct()
@@ -4162,7 +4128,7 @@ def crawl_robots_filter(spark, sf_dir):
         url_host(F.col("canon_url")).alias("host"),
         F.when(rest == "", "/").otherwise(rest).alias("path"),
     )
-    rules = parse_robots(spark.read.parquet(_robots_fixture_path()))
+    rules = parse_robots(spark.read.parquet(_fixture("robots.parquet")))
     return robots_verdict(urls, rules).drop("path")
 
 
@@ -4185,7 +4151,7 @@ def anchor_aliases_query(spark, sf_dir):
     independently in SQL."""
     from deepex_spark.operators.urls import mine_anchor_aliases
 
-    pages = spark.read.parquet(_links_fixture_path())
+    pages = spark.read.parquet(_fixture("pages_links.parquet"))
     return mine_anchor_aliases(pages)
 
 
@@ -4220,7 +4186,7 @@ def anchor_alias_dict_query(spark, sf_dir):
     generic anchors surface as confidence < 1 rows."""
     from deepex_spark.operators.urls import anchor_alias_dict
 
-    pages = spark.read.parquet(_links_fixture_path())
+    pages = spark.read.parquet(_fixture("pages_links.parquet"))
     return anchor_alias_dict(pages)
 
 
@@ -4232,7 +4198,7 @@ def _boiler_cte() -> str:
     detection rollup (distinct-page evidence, host page counts). Mirrors
     operators/curate.py::boilerplate_lines / strip_boilerplate."""
     src = _canon_chain(
-        "c", f"read_parquet('{_links_fixture_path()}')", "url", "url, text"
+        "c", f"read_parquet('{_fixture('pages_links.parquet')}')", "url", "url, text"
     )
     return rf"""
     WITH {src},
@@ -4275,7 +4241,7 @@ def host_boilerplate_query(spark, sf_dir):
     within-page repeats can't promote content."""
     from deepex_spark.operators.curate import boilerplate_lines
 
-    pages = spark.read.parquet(_links_fixture_path())
+    pages = spark.read.parquet(_fixture("pages_links.parquet"))
     return boilerplate_lines(pages)
 
 
@@ -4304,7 +4270,7 @@ def strip_boilerplate_query(spark, sf_dir):
     array_sort, never a global order."""
     from deepex_spark.operators.curate import strip_boilerplate
 
-    pages = spark.read.parquet(_links_fixture_path())
+    pages = spark.read.parquet(_fixture("pages_links.parquet"))
     return strip_boilerplate(pages)
 
 
@@ -4384,7 +4350,7 @@ def dedup_dup_spans(spark, sf_dir):
       SELECT url,
              unnest(range(1, len(string_split(text, chr(10))) + 1)) AS pos,
              unnest(string_split(text, chr(10))) AS raw
-      FROM read_parquet('{_links_fixture_path()}')
+      FROM read_parquet('{_fixture("pages_links.parquet")}')
     ),
     lines AS (
       SELECT url, pos, trim(raw) AS para FROM l0 WHERE trim(raw) <> ''
@@ -4405,7 +4371,7 @@ def dedup_dup_spans(spark, sf_dir):
            coalesce(agg.clean_text, '') AS clean_text,
            CAST(coalesce(agg.total_paras, 0) AS BIGINT) AS total_paras,
            CAST(coalesce(agg.kept_paras, 0) AS BIGINT) AS kept_paras
-    FROM (SELECT DISTINCT url FROM read_parquet('{_links_fixture_path()}')) u
+    FROM (SELECT DISTINCT url FROM read_parquet('{_fixture("pages_links.parquet")}')) u
     LEFT JOIN agg ON u.url = agg.url
     """,
 )
@@ -4420,7 +4386,7 @@ def dedup_paragraphs_query(spark, sf_dir):
     exchange (a row_number window would ship every copy to one task)."""
     from deepex_spark.operators.curate import dedup_paragraphs
 
-    pages = spark.read.parquet(_links_fixture_path())
+    pages = spark.read.parquet(_fixture("pages_links.parquet"))
     return dedup_paragraphs(pages)
 
 
@@ -4461,7 +4427,7 @@ def web_degree_hist(spark, sf_dir):
     max-degree)."""
     from deepex_spark.operators.urls import extract_outlinks
 
-    pages = spark.read.parquet(_links_fixture_path())
+    pages = spark.read.parquet(_fixture("pages_links.parquet"))
     deg = (
         extract_outlinks(pages)
         .groupBy("src_canon")
@@ -4547,7 +4513,7 @@ def web_host_hits(spark, sf_dir):
     from deepex_spark.operators.graph import hits
     from deepex_spark.operators.urls import extract_outlinks
 
-    pages = spark.read.parquet(_links_fixture_path())
+    pages = spark.read.parquet(_fixture("pages_links.parquet"))
     edges = (
         extract_outlinks(pages)
         .where(F.col("src_host") != F.col("dst_host"))
@@ -4574,7 +4540,7 @@ def web_host_pagerank(spark, sf_dir):
     from deepex_spark.operators.graph import pagerank
     from deepex_spark.operators.urls import extract_outlinks
 
-    pages = spark.read.parquet(_links_fixture_path())
+    pages = spark.read.parquet(_fixture("pages_links.parquet"))
     edges = (
         extract_outlinks(pages)
         .where(F.col("src_host") != F.col("dst_host"))
@@ -4594,15 +4560,6 @@ def web_host_pagerank(spark, sf_dir):
 # multi-pass blocking + levenshtein spec in operators/linking.py
 # ---------------------------------------------------------------------------
 
-def _entities_fixture_path() -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "fixtures", "entities.parquet",
-    )
-
-
 def _entity_pairs_cte() -> str:
     """CTE chain ending in relation pairs(id_a, id_b, dist) — mirrors
     operators/linking.py::entity_match_pairs (first-token OR last-token
@@ -4611,7 +4568,7 @@ def _entity_pairs_cte() -> str:
     e AS (
       SELECT ent_id, lower(name) AS norm,
              string_split(lower(name), ' ') AS l
-      FROM read_parquet('{_entities_fixture_path()}')
+      FROM read_parquet('{_fixture("entities.parquet")}')
     ),
     k AS (
       SELECT ent_id, norm, 'F:' || l[1] AS bk FROM e
@@ -4646,7 +4603,7 @@ def entity_match_pairs_query(spark, sf_dir):
     self-joins, like the LSH band joins."""
     from deepex_spark.operators.linking import entity_match_pairs
 
-    ents = spark.read.parquet(_entities_fixture_path())
+    ents = spark.read.parquet(_fixture("entities.parquet"))
     return entity_match_pairs(ents, max_dist=2, max_block=1000)
 
 
@@ -4670,7 +4627,7 @@ def entity_match_pairs_query(spark, sf_dir):
     cc AS (SELECT v, MIN(lab) AS comp FROM reach GROUP BY v)
     SELECT x.ent_id, COALESCE(cc.comp, x.ent_id) AS cluster_id,
            COALESCE(cc.comp, x.ent_id) = x.ent_id AS is_canonical
-    FROM read_parquet('""" + _entities_fixture_path() + """') x
+    FROM read_parquet('""" + _fixture("entities.parquet") + """') x
     LEFT JOIN cc ON cc.v = x.ent_id
     """,
 )
@@ -4683,7 +4640,7 @@ def entity_resolution_clusters(spark, sf_dir):
     from deepex_spark.operators.graph import dedup_clusters
     from deepex_spark.operators.linking import entity_match_pairs
 
-    ents = spark.read.parquet(_entities_fixture_path())
+    ents = spark.read.parquet(_fixture("entities.parquet"))
     pairs = entity_match_pairs(ents, max_dist=2, max_block=1000)
     return dedup_clusters(ents, pairs, id_col="ent_id")
 
@@ -6758,7 +6715,7 @@ def web_host_components(spark, sf_dir):
     from deepex_spark.operators.graph import connected_components
     from deepex_spark.operators.urls import extract_outlinks
 
-    pages = spark.read.parquet(_links_fixture_path())
+    pages = spark.read.parquet(_fixture("pages_links.parquet"))
     hosts = (
         extract_outlinks(pages)
         .select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"))
@@ -6814,7 +6771,7 @@ def web_host_communities(spark, sf_dir):
     from deepex_spark.operators.graph import label_propagation
     from deepex_spark.operators.urls import extract_outlinks
 
-    pages = spark.read.parquet(_links_fixture_path())
+    pages = spark.read.parquet(_fixture("pages_links.parquet"))
     hosts = (
         extract_outlinks(pages)
         .select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"))
@@ -7988,7 +7945,8 @@ def kg_type_closure(spark, sf_dir):
     """RDFS-style type inference (operators/kgq.py::subclass_closure /
     type_extension) over a 3-level taxonomy derived from the part table
     (leaf 'TYPE/name' -> name -> head noun -> root 'part'): transitive
-    subClassOf closure by PATH DOUBLING (2 self-joins cover depth <= 4 —
+    subClassOf closure by PATH DOUBLING to its fixpoint (the taxonomy is
+    3 deep: 2 doubling rounds close it, a third finds nothing new —
     log2(depth) rounds, never depth-many driver iterations), then the
     inferred per-type extension: instances typed at-or-below each node
     via ONE broadcast join of the reflexive closure against the typing
@@ -8019,7 +7977,7 @@ def kg_type_closure(spark, sf_dir):
         .distinct()
     )
     typing = direct.select("instance_id", "type_id")
-    return type_extension(edges, typing, rounds=2)
+    return type_extension(edges, typing)
 
 
 @register(
@@ -8356,19 +8314,10 @@ def _lp_oracle(dim: int = 4, mod: int = 199) -> str:
     )
 
 
-def _html_fixture_path() -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "fixtures", "pages_html.parquet",
-    )
-
-
 def _html_text_oracle() -> str:
     return (
         "SELECT url, text AS page_text "
-        f"FROM read_parquet('{_html_fixture_path()}')"
+        f"FROM read_parquet('{_fixture('pages_html.parquet')}')"
     )
 
 
@@ -8386,7 +8335,7 @@ def html_page_text(spark, sf_dir):
     against a second implementation, not the spec against itself."""
     from deepex_spark.operators.urls import extract_page_text
 
-    return extract_page_text(spark.read.parquet(_html_fixture_path()))
+    return extract_page_text(spark.read.parquet(_fixture("pages_html.parquet")))
 
 
 @register("kg_link_pred_eval", oracle=_lp_oracle())

@@ -14,7 +14,7 @@ from deepex_spark.operators.urls import (
     extract_page_text,
     html_to_text,
 )
-from deepex_spark.queries import _html_fixture_path
+from deepex_spark.queries import _fixture
 
 
 def _py_render(html: str) -> str:
@@ -27,7 +27,7 @@ def _py_render(html: str) -> str:
 def test_spark_matches_dom_ground_truth(spark):
     """Per-url BYTE identity of the engine's rendering vs the fixture's
     DOM-rendered text column — the north-star ingest invariant."""
-    fixture = _html_fixture_path()
+    fixture = _fixture("pages_html.parquet")
     got = {
         r["url"]: r["page_text"]
         for r in extract_page_text(spark.read.parquet(fixture)).collect()
@@ -41,7 +41,7 @@ def test_spark_matches_dom_ground_truth(spark):
 def test_python_mirror_matches_dom_ground_truth():
     """The third engine: Python `re` over the same step list must also
     reproduce the DOM rendering byte-for-byte."""
-    want = pd.read_parquet(_html_fixture_path())
+    want = pd.read_parquet(_fixture("pages_html.parquet"))
     for _, row in want.iterrows():
         assert _py_render(row["html"].decode("utf-8")) == row["text"]
 
@@ -83,7 +83,7 @@ def test_build_kg_derive_text_end_to_end(spark, tmp_path):
     out = tmp_path / "kg"
     main(
         [
-            "--input", _html_fixture_path(),
+            "--input", _fixture("pages_html.parquet"),
             "--output", str(out),
             "--run-id", "dt1",
             "--derive-text",

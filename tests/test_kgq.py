@@ -79,21 +79,27 @@ def test_truth_discovery_tie_breaks_on_value(spark):
 
 
 def test_subclass_closure_path_doubling_depth(spark):
-    """A depth-4 chain a->b->c->d->e closes in 2 doubling rounds
-    (paths of length <= 4), yielding all 10 ancestor pairs."""
+    """A depth-4 chain a->b->c->d->e closes to all 10 ancestor pairs, and
+    a depth-9 chain still closes exactly: the closure runs to its
+    fixpoint rather than a fixed round count that would drop the pairs
+    beyond 2^rounds."""
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")], ["child", "anc"]
     )
-    got = {(r["child"], r["anc"]) for r in subclass_closure(edges, rounds=2).collect()}
+    got = {(r["child"], r["anc"]) for r in subclass_closure(edges).collect()}
     want = {
         (c, a)
         for i, c in enumerate("abcd")
         for a in "abcde"[i + 1 :]
     }
     assert got == want
-    # 1 round only reaches path length 2 — pairs at distance 3-4 missing
-    got1 = {(r["child"], r["anc"]) for r in subclass_closure(edges, rounds=1).collect()}
-    assert ("a", "d") not in got1 and ("a", "e") not in got1
+    # 10-node chain t0 -> ... -> t9: depth 9 > 4, all 45 ancestor pairs
+    chain = spark.createDataFrame(
+        [(f"t{i}", f"t{i + 1}") for i in range(9)], ["child", "anc"]
+    )
+    typing = spark.createDataFrame([(0, "t0")], ["instance_id", "type_id"])
+    out = type_extension(chain, typing).collect()
+    assert sum(r["n_subtypes"] for r in out) == 45
 
 
 def test_type_extension_inferred_counts(spark):
@@ -107,7 +113,7 @@ def test_type_extension_inferred_counts(spark):
         [(1, "leaf1"), (2, "leaf1"), (3, "leaf2"), (4, "mid")],
         ["instance_id", "type_id"],
     )
-    out = {r["type_id"]: r for r in type_extension(edges, typing, rounds=2).collect()}
+    out = {r["type_id"]: r for r in type_extension(edges, typing).collect()}
     assert set(out) == {"leaf1", "leaf2", "mid", "root"}
     assert (out["leaf1"]["n_direct"], out["leaf1"]["n_inferred"]) == (2, 2)
     assert (out["mid"]["n_direct"], out["mid"]["n_inferred"]) == (1, 4)

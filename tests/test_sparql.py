@@ -586,14 +586,20 @@ def test_path_modifier_in_sequence_and_inverse(spark):
     assert sorted(r["x"] for r in inv.collect()) == ["alice", "bob", "carol"]
 
 
-def test_path_plus_long_chain_converges(spark):
-    """A 33-node chain needs depth 32 > 2**5 — the doubling fixpoint
-    must keep going until the full n*(n-1)/2 pair set is closed."""
+def test_path_plus_long_chain_converges(spark, monkeypatch):
+    """A 33-node chain needs depth 32 > 2**4 — the doubling fixpoint
+    must keep going until the full n*(n-1)/2 pair set is closed, and a
+    round cap too small for that depth raises instead of truncating."""
+    from deepex_spark.operators import sparql
+
     n = 33
     rows = [(f"v{i:02d}", "next", f"v{i + 1:02d}") for i in range(n - 1)]
     df = spark.createDataFrame(rows, "src string, rel string, dst string")
-    out = bgp(df, "SELECT ?x ?y WHERE { ?x <next>+ ?y . }")
-    assert out.count() == n * (n - 1) // 2
+    q = "SELECT ?x ?y WHERE { ?x <next>+ ?y . }"
+    assert bgp(df, q).count() == n * (n - 1) // 2
+    monkeypatch.setattr(sparql, "CLOSURE_ROUNDS", 4)
+    with pytest.raises(RuntimeError, match="did not converge within 4"):
+        bgp(df, q)
 
 
 def test_path_modifier_rejections():
