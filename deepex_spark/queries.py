@@ -1526,9 +1526,9 @@ def kg_sparql_path_plus(spark, sf_dir):
     path-doubling rounds through ``graph.fixpoint`` (localCheckpoint
     lineage truncation + count convergence probe, the loop
     connected_components runs) produce SPARQL 1.1's connectivity (set)
-    semantics exactly. The
-    implicit-grouping aggregate keeps the registered output compact
-    while staying sensitive to every closure pair."""
+    semantics exactly. The implicit-grouping aggregate keeps the
+    registered output compact while staying sensitive to every closure
+    pair."""
     from deepex_spark.operators.sparql import bgp
 
     return bgp(
