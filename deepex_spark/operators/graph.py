@@ -76,10 +76,10 @@ GRAPH_N_BUCKETS = 32
 
 
 def with_vertex_bucket(df: DataFrame, n_buckets: int = GRAPH_N_BUCKETS) -> DataFrame:
-    """The ONE definition of the vertex-table bucket layout — fresh
-    builds (materialize_graph) and incremental maintenance
-    (jobs/maintain_kg.py) must cluster identically or bucket-pruned
-    reads/co-bucketed joins silently lose their layout guarantee."""
+    """The ONE definition of the vertex-table bucket layout: every
+    snapshot that incremental maintenance (jobs/maintain_kg.py) or rule
+    materialization (jobs/query_kg.py) publishes clusters the same way,
+    or bucket-pruned reads silently lose their layout guarantee."""
     return df.withColumn("bucket", F.pmod(F.col("entity_id"), F.lit(n_buckets)).cast("int"))
 
 
@@ -108,27 +108,6 @@ def write_graph(write, vertices: DataFrame, edges: DataFrame) -> None:
         done = [pool.submit(target, vertices, "vertices"), pool.submit(target, edges, "edges")]
     for f in done:
         f.result()
-
-
-def materialize_graph(canon_triples: DataFrame, catalog, run_id: str = "run0"):
-    """Write vertices/edges via the catalog (Iceberg or parquet shim),
-    bucketed by entity/edge id for pruning + balanced layout, side by side
-    (``write_graph``). On a catalog that has been through maintenance
-    (tables snapshot-versioned, jobs/maintain_kg.py), a full rebuild
-    publishes a NEW snapshot instead of failing the plain-write guard —
-    periodic rebuild-to-reset-drift keeps working after the first
-    incremental merge."""
-    v = with_vertex_bucket(build_vertices(canon_triples, run_id))
-    e = with_edge_bucket(build_edges(canon_triples, run_id))
-
-    def write(df: DataFrame, table: str) -> None:
-        if getattr(catalog, "fmt", "parquet") != "iceberg" and catalog.is_versioned(table):
-            catalog.write_snapshot(df, table, partition_by=["bucket"], run_id=run_id)
-        else:
-            catalog.write(df, table, partition_by=["bucket"])
-
-    write_graph(write, v, e)
-    return v, e
 
 
 def merge_vertices(existing: DataFrame, delta: DataFrame, run_id: str = "merge") -> DataFrame:
@@ -178,6 +157,43 @@ def merge_edges(existing: DataFrame, delta: DataFrame, run_id: str = "merge") ->
         .withColumn("run_id", F.lit(run_id))
         .withColumn("src_partition", F.spark_partition_id())
     )
+
+
+def fold_snapshot(spark, catalog, table: str, run_id: str, delta, merge=merge_edges) -> int:
+    """Fold a delta into ``table`` and publish the result as snapshot run
+    ``run_id``, exactly once -> the version that run published. The one
+    commit path of the incrementally maintained graph tables:
+    ``streaming/kg_stream.fold_batch``, ``jobs/maintain_kg.maintain`` and
+    the ``jobs/query_kg`` rule materializers all fold through it.
+
+    A run_id already published returns its version and does no work.
+    Otherwise the current table is read (the published snapshot, or the
+    plain layout a build wrote), ``delta(existing)`` builds the delta —
+    from the same read it is merged into — and ``merge(existing, delta,
+    run_id=run_id)`` folds it in, with the lineage columns ``run_id``,
+    ``src_partition`` and ``bucket`` dropped from both sides first (the
+    merge stamps its own). A table that does not exist yet gets the
+    delta alone (``delta(None)``), with lineage. The result is published
+    with ``write_snapshot``, partitioned by ``bucket`` when the merged
+    frame carries that column; ``write_snapshot`` re-checks the run_id
+    inside its publish lock, so a racing retry cannot apply a delta
+    twice."""
+    already = catalog.version_of_run(table, run_id)
+    if already is not None:
+        return already
+    lineage = ("run_id", "src_partition", "bucket")
+    if catalog.exists(table):
+        existing = catalog.read(spark, table).drop(*lineage)
+        merged = merge(existing, delta(existing).drop(*lineage), run_id=run_id)
+    else:
+        merged = (
+            delta(None)
+            .drop(*lineage)
+            .withColumn("run_id", F.lit(run_id))
+            .withColumn("src_partition", F.spark_partition_id())
+        )
+    parts = ["bucket"] if "bucket" in merged.columns else None
+    return catalog.write_snapshot(merged, table, partition_by=parts, run_id=run_id)
 
 
 def fixpoint(state: DataFrame, step, probe, max_rounds: int, value=None):
@@ -232,11 +248,12 @@ def connected_components(
     self-join), the iterative pattern pre-GraphFrames Spark deployments
     use for web-graph CC.
 
-    100 TB notes: state is one (v, comp) row per vertex and messages are
-    one row per edge — nothing is ever collected to the driver (the
-    convergence probe is a ``limit(1).count()`` on the changed-set, an
-    early-exit scan). A mega-component's hub key skews the groupBy; AQE's
-    skew handling splits it. ``localCheckpoint`` truncates each round's
+    100 TB notes: state is one (v, comp, moved) row per vertex and
+    messages are one row per edge — nothing is ever collected to the
+    driver (the convergence probe is a ``limit(1).count()`` over the rows
+    the step flagged ``moved``, an early-exit scan of the checkpointed
+    state). A mega-component's hub key skews the groupBy; AQE's skew
+    handling splits it. ``localCheckpoint`` truncates each round's
     lineage — without it the unioned plan doubles per iteration and the
     optimizer, not the data, becomes the bottleneck. Labels still
     changing after ``CC_MAX_ROUNDS`` rounds raise ``RuntimeError``.
@@ -265,24 +282,21 @@ def connected_components(
         prop = labels.join(nbr, on="u", how="left").select(
             "u",
             F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
+            F.col("comp").alias("old"),
         )
         hop = prop.select(F.col("u").alias("c_u"), F.col("comp").alias("c_comp"))
+        comp = F.least(F.col("comp"), F.coalesce("c_comp", F.col("comp")))
+        # each vertex still holds its old label here, so the step flags
+        # the moved ones itself and the probe needs no join against the
+        # old state
         return prop.join(hop, prop["comp"] == hop["c_u"], "left").select(
-            "u",
-            F.least(F.col("comp"), F.coalesce("c_comp", F.col("comp"))).alias("comp"),
+            "u", comp.alias("comp"), (comp != F.col("old")).alias("moved")
         )
 
-    def unchanged(new: DataFrame, old: DataFrame, _) -> tuple:
-        changed = (
-            new.alias("n")
-            .join(old.alias("o"), "u")
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        return None, changed == 0
+    def settled(new: DataFrame, old: DataFrame, _) -> tuple:
+        return None, new.where("moved").limit(1).count() == 0
 
-    labels, converged = fixpoint(labels, step, unchanged, CC_MAX_ROUNDS)
+    labels, converged = fixpoint(labels, step, settled, CC_MAX_ROUNDS)
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge within {CC_MAX_ROUNDS} rounds"
@@ -644,26 +658,40 @@ def pagerank(
     a deterministic function of the graph (and SQL-reproducible by
     unrolling), which a convergence-threshold variant would not be.
     """
+    _, e, verts = _directed_edges(edges, src, dst)
+    verts = verts.localCheckpoint(eager=True)
+    n = verts.count()
+    rebuild = F.lit((1.0 - damping) / n) + F.lit(damping) * (
+        F.coalesce("csum", F.lit(0.0)) + F.col("dang") / F.lit(float(n))
+    )
+    return _power_iteration(e, verts, verts.withColumn("r", F.lit(1.0 / n)), rebuild, n_iter)
+
+
+def _directed_edges(edges: DataFrame, src: str, dst: str) -> tuple:
+    """The PageRank prelude -> ``(idt, e, verts)``: the id cast type, the
+    distinct (s, d) edge set (checkpointed) and its vertex set (v)."""
     idt = _id_cast_type(edges.schema[src].dataType, edges.schema[dst].dataType)
     e = (
         edges.select(F.col(src).cast(idt).alias("s"), F.col(dst).cast(idt).alias("d"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # verts / out_deg / links are static across rounds but feed THREE
-    # actions per round (dangling probe, contrib join, rank rebuild) —
-    # materialize each once instead of re-deriving the upstream edge
-    # build (e.g. o21_reverse_union's join tree) 30x over 10 rounds
-    verts = (
-        e.select(F.col("s").alias("v"))
-        .union(e.select(F.col("d").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = verts.count()
+    verts = e.select(F.col("s").alias("v")).union(e.select(F.col("d").alias("v"))).distinct()
+    return idt, e, verts
+
+
+def _power_iteration(e: DataFrame, verts: DataFrame, ranks: DataFrame, rebuild, n_iter: int):
+    """``n_iter`` PageRank rounds from ``ranks`` (v, r) -> (v, r). Each
+    round's new rank is the ``rebuild`` Column over ``verts``' columns,
+    ``csum`` (the summed in-contributions) and ``dang`` (the dangling
+    mass); the caller's expression is used unchanged, so each variant
+    keeps the IEEE expression tree its unrolled-SQL oracle pins."""
+    # out_deg / links are static across rounds but feed THREE actions per
+    # round (dangling probe, contrib join, rank rebuild) — materialize each
+    # once instead of re-deriving the upstream edge build (e.g.
+    # o21_reverse_union's join tree) 30x over 10 rounds
     out_deg = e.groupBy("s").agg(F.count("*").alias("deg")).localCheckpoint(eager=True)
     links = e.join(out_deg, "s").localCheckpoint(eager=True)
-    ranks = verts.withColumn("r", F.lit(1.0 / n))
     for _ in range(n_iter):
         dang = (
             ranks.join(out_deg, ranks["v"] == out_deg["s"], "left_anti")
@@ -676,14 +704,7 @@ def pagerank(
         ranks = (
             verts.join(summed, "v", "left")
             .crossJoin(F.broadcast(dang))
-            .select(
-                "v",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce("csum", F.lit(0.0)) + F.col("dang") / F.lit(float(n)))
-                ).alias("r"),
-            )
+            .select("v", rebuild.alias("r"))
             .localCheckpoint(eager=True)
         )
     return ranks
@@ -847,23 +868,14 @@ def personalized_pagerank(
     the unrolled-SQL oracles pin the existing expression tree
     bit-for-bit, so the generalization must not touch it.
 
-    Same distributed shape as ``pagerank`` (two key-partitioned shuffles
-    per round, broadcast 1-row dangling aggregate, per-round lineage
-    truncation); the only new piece is the per-vertex teleport column
+    The same loop as ``pagerank`` (``_power_iteration``: two
+    key-partitioned shuffles per round, broadcast 1-row dangling
+    aggregate, per-round lineage truncation), each passing its own rank
+    rebuild; the only new piece is the per-vertex teleport column
     ``e`` (1/|S| on seeds, 0 elsewhere), joined once and carried through
     the rebuild. Mass is conserved: (1-d)*sum(e) + d*(contrib + dang) = 1.
     """
-    idt = _id_cast_type(edges.schema[src].dataType, edges.schema[dst].dataType)
-    e = (
-        edges.select(F.col(src).cast(idt).alias("s"), F.col(dst).cast(idt).alias("d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    verts = (
-        e.select(F.col("s").alias("v"))
-        .union(e.select(F.col("d").alias("v")))
-        .distinct()
-    )
+    idt, e, verts = _directed_edges(edges, src, dst)
     seed_ids = seeds.select(F.col(seeds.columns[0]).cast(idt).alias("v")).distinct()
     in_graph = verts.join(seed_ids, "v", "left_semi")
     ns = in_graph.count()
@@ -878,32 +890,10 @@ def personalized_pagerank(
         )
         .localCheckpoint(eager=True)
     )
-    out_deg = e.groupBy("s").agg(F.count("*").alias("deg")).localCheckpoint(eager=True)
-    links = e.join(out_deg, "s").localCheckpoint(eager=True)
-    ranks = verts.select("v", F.col("e").alias("r"))
-    for _ in range(n_iter):
-        dang = (
-            ranks.join(out_deg, ranks["v"] == out_deg["s"], "left_anti")
-            .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("dang"))
-        )
-        contrib = links.join(ranks, links["s"] == ranks["v"]).select(
-            F.col("d").alias("v"), (F.col("r") / F.col("deg")).alias("c")
-        )
-        summed = contrib.groupBy("v").agg(F.sum("c").alias("csum"))
-        ranks = (
-            verts.join(summed, "v", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "v",
-                (
-                    F.lit(1.0 - damping) * F.col("e")
-                    + F.lit(damping)
-                    * (F.coalesce("csum", F.lit(0.0)) + F.col("dang") * F.col("e"))
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
+    rebuild = F.lit(1.0 - damping) * F.col("e") + F.lit(damping) * (
+        F.coalesce("csum", F.lit(0.0)) + F.col("dang") * F.col("e")
+    )
+    return _power_iteration(e, verts, verts.select("v", F.col("e").alias("r")), rebuild, n_iter)
 
 
 def hits(

@@ -78,12 +78,18 @@ def _has_data(data_dir: str) -> bool:
     )
 
 
+def _publish_json(obj, path: str) -> None:
+    """Write ``obj`` as JSON to ``path`` whole: the data goes to a temporary
+    sibling, and ``os.replace`` swaps it in, so a reader sees the old file
+    or the new one, never a partial write."""
+    with open(path + ".tmp", "w") as f:
+        json.dump(obj, f)
+    os.replace(path + ".tmp", path)
+
+
 def _write_sidecar(schema: StructType, data_dir: str) -> None:
     # readers skip "_"-prefixed files, so the rename publishes it whole
-    sp = os.path.join(data_dir, _SCHEMA_FILE)
-    with open(sp + ".tmp", "w") as f:
-        json.dump(schema.jsonValue(), f)
-    os.replace(sp + ".tmp", sp)
+    _publish_json(schema.jsonValue(), os.path.join(data_dir, _SCHEMA_FILE))
 
 
 def _write_parquet(df: DataFrame, data_dir: str, mode: str, partition_by=None) -> None:
@@ -116,7 +122,7 @@ def _scan(spark: SparkSession, data_dir: str) -> DataFrame:
 
 
 class Catalog:
-    def __init__(self, base_dir: str, fmt: str = "parquet", spark: SparkSession | None = None):
+    def __init__(self, base_dir: str, fmt: str = "parquet"):
         self.base_dir = base_dir
         self.fmt = fmt
         os.makedirs(base_dir, exist_ok=True)
@@ -218,10 +224,7 @@ class Catalog:
         for b in range(n_buckets):
             if b not in done:
                 manifest["buckets"][str(b)] = {"run_id": run_id, "written_at": now}
-        tmp = mp + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, mp)
+        _publish_json(manifest, mp)
         return written.get["rows"]
 
     def pending(self, df: DataFrame, table: str, bucket_col: str = "docid", n_buckets: int = 32) -> DataFrame:
@@ -324,12 +327,12 @@ class Catalog:
         (``read_snapshot(..., version=K)``) until explicitly expired.
         This is what lets incremental KG maintenance publish a rebuilt
         vertices/edges table while queries keep running against the old
-        one. ``run_id`` is recorded in the manifest so idempotent jobs
-        (jobs/maintain_kg.py) can detect an already-applied batch and
-        skip the re-merge on retry. Version allocation + publish run
-        under a single-host file lock. With ``fmt='iceberg'`` the
-        engine's own snapshot commit subsumes this (``VERSION AS OF``
-        time travel). Returns the new version number."""
+        one. ``run_id`` is recorded in the manifest so the idempotent
+        fold (``operators/graph.py::fold_snapshot``) can detect an
+        already-applied batch and skip the re-merge on retry. Version
+        allocation + publish run under a single-host file lock. With
+        ``fmt='iceberg'`` the engine's own snapshot commit subsumes this
+        (``VERSION AS OF`` time travel). Returns the new version number."""
         if self.fmt == "iceberg":  # pragma: no cover - jars absent in sandbox
             df.writeTo(table).createOrReplace()
             return -1
@@ -352,22 +355,8 @@ class Catalog:
             )
             man["current"] = v
             man["versions"][str(v)] = {"written_at": time.time(), "run_id": run_id}
-            sp = self._snapshot_manifest_path(table)
-            tmp = sp + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(man, f)
-            os.replace(tmp, sp)
+            _publish_json(man, self._snapshot_manifest_path(table))
         return v
-
-    def snapshot_run_ids(self, table: str) -> set[str]:
-        """run_ids already published to this table, INCLUDING runs whose
-        version data has since been expired (history survives retention,
-        so a stale retry of an old batch can never re-apply it)."""
-        man = self._snapshot_manifest(table)
-        live = {
-            meta["run_id"] for meta in man["versions"].values() if meta.get("run_id")
-        }
-        return live | set(man.get("expired_run_ids", []))
 
     def read_snapshot(
         self, spark: SparkSession, table: str, version: int | None = None
@@ -414,11 +403,7 @@ class Catalog:
                     expired.add(rid)  # keep idempotency history past retention
                 del man["versions"][str(v)]
             man["expired_run_ids"] = sorted(expired)
-            sp = self._snapshot_manifest_path(table)
-            tmp = sp + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(man, f)
-            os.replace(tmp, sp)
+            _publish_json(man, self._snapshot_manifest_path(table))
             # delete dropped dirs + sweep orphans from earlier crashed
             # expires (on disk but absent from the manifest)
             base = self.path(table)
@@ -428,92 +413,6 @@ class Catalog:
                     if d.startswith("_v") and d not in live:
                         shutil.rmtree(os.path.join(base, d), ignore_errors=True)
         return drop
-
-    # -- maintenance ------------------------------------------------------
-    def compact(
-        self,
-        spark: SparkSession,
-        table: str,
-        target_bytes: int = 128 << 20,
-    ) -> dict:
-        """Small-file compaction for a (possibly bucket-partitioned)
-        parquet table: rewrite every partition whose file count exceeds
-        ``ceil(bytes / target_bytes)`` down to that many files.
-
-        The small-file problem is the dominant operational failure of
-        long-lived incremental tables at scale — every resume append adds
-        a file per write task (per task x bucket for a ``bucket=``
-        partitioned table), and a 100 TB table with millions of
-        8 MB files spends more time in listing + open() than in IO.
-        Compaction is value-neutral (read -> coalesce -> rewrite, no
-        shuffle: coalesce only merges co-located splits), idempotent
-        (re-running is a no-op once each partition is at target), and
-        leaves the resume manifest untouched. Each partition swaps via
-        rewrite-to-temp + rename; run it offline like any table
-        maintenance job (readers racing the swap can see a partial
-        partition — Iceberg's snapshot commit is the online answer, and
-        the ``fmt='iceberg'`` catalog branch gets that for free).
-        Returns ``{partition: (files_before, files_after)}``.
-        """
-        import math
-        import shutil
-
-        if self.fmt == "iceberg":  # pragma: no cover - jars absent in sandbox
-            raise NotImplementedError(
-                "compact() rewrites raw parquet partition dirs; for an "
-                "iceberg catalog use the engine's snapshot-committing "
-                "rewrite instead (CALL system.rewrite_data_files)"
-            )
-        base = self.path(table)
-        # snapshot-versioned tables: compact the CURRENT version's
-        # directory. The root of such a table holds the _vN dirs — the
-        # wholesale root swap below would move (then rmtree) EVERY
-        # snapshot, destroying the table.
-        man = self._snapshot_manifest(table)
-        if man["versions"]:
-            base = os.path.join(base, f"_v{int(man['current'])}")
-        parts = [d for d in sorted(os.listdir(base)) if d.startswith("bucket=")]
-        recorded = _read_sidecar(base)
-        report: dict[str, tuple[int, int]] = {}
-        for d in parts or [""]:
-            pdir = os.path.join(base, d) if d else base
-            files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-            size = sum(os.path.getsize(os.path.join(pdir, f)) for f in files)
-            n_out = max(1, math.ceil(size / target_bytes))
-            if len(files) <= n_out:
-                continue
-            # temp dirs are SIBLINGS of the dir being swapped — never
-            # inside it — and underscore-prefixed so a crash-left temp is
-            # invisible to Spark's file listing / partition discovery.
-            # mergeSchema: a long-lived incremental table may carry schema
-            # drift across appended files; inferring from one footer would
-            # silently drop later columns from the rewrite. A recorded
-            # schema means no drift (an append that drifts drops it).
-            tmp = os.path.join(os.path.dirname(pdir), f"_compact_{table}_{d or 'root'}")
-            old = tmp + ".old"
-            reader = (
-                spark.read.option("mergeSchema", "true")
-                if recorded is None
-                else spark.read.schema(recorded)
-            )
-            rewritten = reader.parquet(pdir).coalesce(n_out)
-            if d:
-                rewritten.write.mode("overwrite").parquet(tmp)
-            else:  # the root swap carries a sidecar true to the rewrite
-                _write_parquet(rewritten, tmp, "overwrite")
-            # swap order narrows the unreadable window to two renames
-            # (microseconds, vs spanning a whole rmtree): live dir aside,
-            # rewrite into place, THEN delete. A crash at any point leaves
-            # the data intact under `pdir`, `old` or `tmp` — recoverable,
-            # never silently lost.
-            os.replace(pdir, old)
-            os.replace(tmp, pdir)
-            shutil.rmtree(old)
-            report[d or "."] = (
-                len(files),
-                len([f for f in os.listdir(pdir) if f.endswith(".parquet")]),
-            )
-        return report
 
     # -- metrics ----------------------------------------------------------
     def log_metric(self, spark: SparkSession, stage: str, rows: int, wall_s: float, run_id: str = "run0"):

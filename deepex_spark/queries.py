@@ -25,11 +25,13 @@ from pyspark.sql import functions as F
 from deepex_spark.config import DeepExConfig
 
 
+# the repo root: committed fixtures and goldens are read from under it
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _fixture(name: str) -> str:
     """Absolute path of a committed file under the repo's ``fixtures/``."""
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures", name
-    )
+    return os.path.join(_REPO, "fixtures", name)
 
 
 # importing the kernel here builds the native extension ONCE, driver-side,
@@ -6127,12 +6129,7 @@ def _mm_golden(golden_file: str, cols: str) -> str:
     is seeded-deterministic and corpus-independent (the queries ignore
     sf_dir), so the oracle is an unkeyed pinned parquet of the query's own
     output (regenerate with ``python tools/make_multimodal_golden.py``)."""
-    import os
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "goldens", golden_file,
-    )
+    path = os.path.join(_REPO, "goldens", golden_file)
     return f"SELECT {cols} FROM read_parquet('{path}')"
 
 
@@ -6400,12 +6397,7 @@ def _golden_oracle(golden_file: str, cols: str) -> str:
     ``make_ie_golden.py``), keyed by a fingerprint of the documents table so
     the same SQL serves every sf dir. An unknown corpus fingerprint returns
     zero rows — an honest mismatch, never a silent pass."""
-    import os
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "goldens", golden_file,
-    )
+    path = os.path.join(_REPO, "goldens", golden_file)
     return f"""
     SELECT {cols}
     FROM read_parquet('{path}') g

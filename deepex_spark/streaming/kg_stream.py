@@ -3,10 +3,10 @@ snapshot catalog, exactly once per batch id.
 
 ``batch_edges`` aggregates one batch of triples into the edge-table
 schema; ``fold_batch`` returns a ``fold(batch_df, batch_id)`` function
-that merges that delta into the live snapshot through the production
-fold (``operators/graph.py::merge_edges``) and publishes it with the
-idempotent ``plans/catalog.py::write_snapshot``. Both are batch bodies:
-the caller decides when a batch is ready and which id it carries.
+that merges that delta into the live table and publishes a snapshot
+through ``operators/graph.py::fold_snapshot``, the commit path
+``jobs/maintain_kg.py`` uses too. Both are batch bodies: the caller
+decides when a batch is ready and which id it carries.
 
 Exactly once: the publish is idempotent per ``run_id =
 <prefix>-<batch_id>``. Folding the same batch id a second time (a
@@ -49,28 +49,12 @@ def batch_edges(triples: DataFrame) -> DataFrame:
 def fold_batch(catalog, table: str, run_prefix: str = "stream"):
     """Return ``fold(batch_df, batch_id)``, closing over the catalog: it
     folds one batch into ``table`` and publishes it as run
-    ``<run_prefix>-<batch_id>``, or skips a batch id already published."""
-    from deepex_spark.operators.graph import merge_edges
+    ``<run_prefix>-<batch_id>`` through ``graph.fold_snapshot``, or skips
+    a batch id already published."""
+    from deepex_spark.operators.graph import fold_snapshot
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        run_id = f"{run_prefix}-{batch_id}"
-        spark = batch_df.sparkSession
-        delta = batch_edges(batch_df)
-        if catalog.is_versioned(table):
-            if catalog.version_of_run(table, run_id) is not None:
-                return  # replayed batch: already published, skip the work
-            # the published snapshot carries lineage columns the fresh
-            # delta doesn't — strip them so the unionByName inside
-            # merge_edges sees two identical stat schemas (merge re-stamps
-            # run_id/src_partition on the way out)
-            existing = catalog.read_snapshot(spark, table).drop(
-                "run_id", "src_partition"
-            )
-            merged = merge_edges(existing, delta, run_id=run_id)
-        else:
-            merged = delta.withColumn("run_id", F.lit(run_id)).withColumn(
-                "src_partition", F.spark_partition_id()
-            )
-        catalog.write_snapshot(merged, table, run_id=run_id)
+        fold_snapshot(batch_df.sparkSession, catalog, table, f"{run_prefix}-{batch_id}",
+                      lambda _existing: batch_edges(batch_df))
 
     return fold

@@ -54,7 +54,9 @@ def _sweep_stale_root(catalog, table: str) -> None:
 
 def maintain(spark, catalog, delta_catalog, run_id: str = "merge", sweep_stale: bool = False):
     """Merge delta vertices/edges into the live KG and publish one new
-    snapshot per table. Returns {table: (version, row_count)}.
+    snapshot per table, both through ``graph.fold_snapshot``. Returns
+    {table: (version, row_count)}; a live catalog without either table
+    raises ``ValueError``.
 
     IDEMPOTENT per (table, run_id): ``write_snapshot`` re-checks the
     run_id INSIDE its publish lock (and the manifest retains run_ids
@@ -66,6 +68,7 @@ def maintain(spark, catalog, delta_catalog, run_id: str = "merge", sweep_stale: 
     path reports the version that run_id actually published, not
     whatever is current."""
     from deepex_spark.operators.graph import (
+        fold_snapshot,
         merge_edges,
         merge_vertices,
         with_edge_bucket,
@@ -73,27 +76,16 @@ def maintain(spark, catalog, delta_catalog, run_id: str = "merge", sweep_stale: 
     )
 
     report = {}
-    plan = {
-        "vertices": (with_vertex_bucket, merge_vertices),
-        "edges": (with_edge_bucket, merge_edges),
+    merges = {
+        "vertices": lambda e, d, run_id: with_vertex_bucket(merge_vertices(e, d, run_id=run_id)),
+        "edges": lambda e, d, run_id: with_edge_bucket(merge_edges(e, d, run_id=run_id)),
     }
-    for table, (bucketer, merge_fn) in plan.items():
-        already = catalog.version_of_run(table, run_id)
-        if already is not None:
-            report[table] = (
-                already,
-                catalog.read_snapshot(spark, table, version=already).count(),
-            )
-            continue
-        # read() serves the current snapshot for versioned tables and the
-        # plain layout otherwise (first run = migration into _v1)
-        existing = catalog.read(spark, table)
-        delta = delta_catalog.read(spark, table)
-        cols = [c for c in existing.columns if c != "bucket"]
-        merged = bucketer(
-            merge_fn(existing.select(*cols), delta.select(*cols), run_id=run_id)
-        )
-        v = catalog.write_snapshot(merged, table, partition_by=["bucket"], run_id=run_id)
+    for table, merge in merges.items():
+        if not catalog.exists(table):
+            # a missing live table would publish the delta alone as the KG
+            raise ValueError(f"live catalog has no {table!r} table to merge into")
+        v = fold_snapshot(spark, catalog, table, run_id,
+                          lambda _existing: delta_catalog.read(spark, table), merge)
         if sweep_stale:
             _sweep_stale_root(catalog, table)
         report[table] = (v, catalog.read_snapshot(spark, table, version=v).count())

@@ -173,7 +173,7 @@ def main(argv=None):
         p.error("nothing to do: need --rules-out and/or --materialize")
 
     spark = build_session(master=args.master) if args.master else build_session()
-    catalog = Catalog(args.catalog, fmt=args.catalog_format, spark=spark)
+    catalog = Catalog(args.catalog, fmt=args.catalog_format)
     from pyspark.sql import functions as F
 
     # cols is (subject, predicate, object); the miner takes (src, dst, rel)

@@ -189,33 +189,15 @@ def materialize_construct(spark, catalog, query: str, run_id: str,
                           cols: tuple = ("subj_id", "pred_canon", "obj_id"),
                           allow_product: bool = False):
     """Run a CONSTRUCT query against the live edge snapshot and merge the
-    derived triples back into it — the rule-materialization write path.
-    Mirrors ``jobs/maintain_kg.maintain``'s edges arm: same
-    ``merge_edges`` fold, same bucket layout, same snapshot-versioned
-    publish, and IDEMPOTENT per ``run_id`` (``write_snapshot`` re-checks
-    the run_id inside its publish lock, so a retried job can never
-    double-count rule evidence). Returns ``(version, row_count)``.
+    derived triples back into it — the rule-materialization write path:
+    ``materialize_rules`` with one rule, whose evidence is tagged
+    ``sparql:<run_id>``. Returns ``(version, row_count)``.
 
     Re-running the same rule under a NEW run_id adds evidence again — the
     same contract as re-merging any delta; pick run_ids per rule firing.
     """
-    head = query.split(None, 1)[0].upper() if query.split() else ""
-    if head != "CONSTRUCT":
-        raise ValueError("materialize_construct needs a CONSTRUCT query")
-    from deepex_spark.operators.graph import merge_edges, with_edge_bucket
-
-    already = catalog.version_of_run(table, run_id)
-    if already is not None:
-        return already, catalog.read_snapshot(spark, table, version=already).count()
-    existing = catalog.read(spark, table)
-    keep = [c for c in existing.columns if c != "bucket"]
-    derived = _compile(existing, query, cols, allow_product)
-    delta = derived_edges_delta(derived, run_id).select(*keep)
-    merged = with_edge_bucket(
-        merge_edges(existing.select(*keep), delta, run_id=run_id)
-    )
-    v = catalog.write_snapshot(merged, table, partition_by=["bucket"], run_id=run_id)
-    return v, catalog.read_snapshot(spark, table, version=v).count()
+    return _materialize(spark, catalog, {f"sparql:{run_id}": query}, run_id,
+                        table, cols, allow_product)
 
 
 def materialize_rules(spark, catalog, rules: list, run_id: str,
@@ -231,35 +213,44 @@ def materialize_rules(spark, catalog, rules: list, run_id: str,
     Contrast with N materialize_construct calls: N merges, N publishes,
     and order-dependent results.
 
-    Idempotent per ``run_id`` like every publish (retried batches cannot
-    double-count). Each rule's evidence is tagged ``sparql:<run_id>#<i>``
-    so per-rule lineage survives the shared publish. Transitive closure =
-    re-run the batch under fresh run_ids until ASK says no new edges (or
-    query with a +/* property path, whose closure is exact). Returns ``(version, row_count)``."""
-    from deepex_spark.operators.graph import merge_edges, with_edge_bucket
-
+    Each rule's evidence is tagged ``sparql:<run_id>#<i>`` so per-rule
+    lineage survives the shared publish. Transitive closure = re-run the
+    batch under fresh run_ids until ASK says no new edges (or query with
+    a +/* property path, whose closure is exact). Returns ``(version,
+    row_count)``."""
     if not rules:
         raise ValueError("materialize_rules needs at least one rule")
-    for r in rules:
+    return _materialize(spark, catalog,
+                        {f"sparql:{run_id}#{i}": r for i, r in enumerate(rules)},
+                        run_id, table, cols, allow_product)
+
+
+def _materialize(spark, catalog, rules: dict, run_id: str, table: str,
+                 cols: tuple, allow_product: bool):
+    """Fold the triples ``{evidence_tag: CONSTRUCT rule}`` derive from the
+    live edge snapshot back into it through ``graph.fold_snapshot`` (the
+    commit path ``jobs/maintain_kg.maintain`` uses): same ``merge_edges``
+    fold, same bucket layout, and IDEMPOTENT per ``run_id`` — a retried
+    job can never double-count rule evidence."""
+    from deepex_spark.operators.graph import fold_snapshot, merge_edges, with_edge_bucket
+
+    for r in rules.values():
         head = r.split(None, 1)[0].upper() if r.split() else ""
         if head != "CONSTRUCT":
             raise ValueError(f"not a CONSTRUCT rule: {r[:60]!r}")
-    already = catalog.version_of_run(table, run_id)
-    if already is not None:
-        return already, catalog.read_snapshot(spark, table, version=already).count()
-    existing = catalog.read(spark, table)
-    keep = [c for c in existing.columns if c != "bucket"]
-    delta = None
-    for i, r in enumerate(rules):
-        derived = _compile(existing, r, cols, allow_product)
-        d = derived_edges_delta(
-            derived, run_id, evidence_tag=f"sparql:{run_id}#{i}"
-        ).select(*keep)
-        delta = d if delta is None else delta.unionByName(d)
-    merged = with_edge_bucket(
-        merge_edges(existing.select(*keep), delta, run_id=run_id)
-    )
-    v = catalog.write_snapshot(merged, table, partition_by=["bucket"], run_id=run_id)
+    if not catalog.exists(table):
+        raise ValueError(f"catalog has no {table!r} table to materialize rules over")
+
+    def delta(existing):
+        out = None
+        for tag, r in rules.items():
+            d = derived_edges_delta(_compile(existing, r, cols, allow_product), run_id,
+                                    evidence_tag=tag)
+            out = d if out is None else out.unionByName(d)
+        return out
+
+    v = fold_snapshot(spark, catalog, table, run_id, delta,
+                      lambda e, d, run_id: with_edge_bucket(merge_edges(e, d, run_id=run_id)))
     return v, catalog.read_snapshot(spark, table, version=v).count()
 
 
@@ -315,7 +306,7 @@ def main(argv=None):
         p.error("--rules-file requires --materialize RUN_ID")
 
     spark = build_session(master=args.master) if args.master else build_session()
-    catalog = Catalog(args.catalog, fmt=args.catalog_format, spark=spark)
+    catalog = Catalog(args.catalog, fmt=args.catalog_format)
     if args.rules_file:
         with open(args.rules_file) as f:
             text = f.read()

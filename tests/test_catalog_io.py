@@ -143,30 +143,6 @@ def test_overwrite_records_the_new_schema(spark, tmp_path):
     assert jobs == [] and got.schema == spark.read.parquet(cat.path("t")).schema
 
 
-@pytest.mark.parametrize("partition_by", [None, ["bucket"]])
-def test_compact_keeps_reads_equal_to_inference(spark, tmp_path, partition_by):
-    cat = Catalog(str(tmp_path))
-    df = _nested(spark).repartition(4)
-    cat.write(df, "t", partition_by=partition_by)
-    cat.write(df, "t", mode="append", partition_by=partition_by)
-    assert cat.compact(spark, "t")
-    got, jobs = _jobs(spark, lambda: cat.read(spark, "t"))
-    assert jobs == []
-    assert got.schema == spark.read.parquet(cat.path("t")).schema
-    assert got.count() == 80
-
-
-def test_compact_checkpoint_keeps_sidecar(spark, tmp_path):
-    cat = Catalog(str(tmp_path))
-    df = spark.range(100, numPartitions=4).withColumn("docid", F.col("id"))
-    cat.checkpoint(df, "t", n_buckets=4)
-    assert len(_parquet_files(cat.path("t"))) == 4
-    assert cat.compact(spark, "t") == {".": (4, 1)}
-    got, jobs = _jobs(spark, lambda: cat.read(spark, "t"))
-    assert jobs == [] and got.count() == 100
-    assert got.schema == spark.read.parquet(cat.path("t")).schema
-
-
 def test_checkpoint_is_flat_one_file_per_task(spark, tmp_path):
     cat = Catalog(str(tmp_path))
     df = spark.range(200, numPartitions=1).withColumn("docid", F.col("id").cast("string"))

@@ -1,63 +1,9 @@
-"""Catalog small-file compaction (plans/catalog.py::compact)."""
+"""Catalog snapshot versions (plans/catalog.py::write_snapshot,
+read_snapshot, expire_snapshots) and the guards around them."""
 
 from pyspark.sql import functions as F
 
 from deepex_spark.plans.catalog import Catalog
-
-
-def _file_count(path):
-    import os
-
-    return sum(
-        1
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-
-
-def test_compact_bucketed_table(spark, tmp_path):
-    cat = Catalog(str(tmp_path))
-    df = spark.range(2000).select(
-        F.col("id").alias("docid"), (F.col("id") * 3).alias("score")
-    )
-    # three appends x 8 writing tasks -> many small files per bucket
-    for i in range(3):
-        cat.write(
-            df.withColumn("batch", F.lit(i))
-            .repartition(8)
-            .withColumn("bucket", F.pmod(F.xxhash64("docid"), F.lit(4)).cast("int")),
-            "t",
-            mode="append" if i else "overwrite",
-            partition_by=["bucket"],
-        )
-    before_files = _file_count(cat.path("t"))
-    before = cat.read(spark, "t")
-    before_rows = before.count()
-    before_sum = before.agg(F.sum("score")).collect()[0][0]
-    assert before_files > 4  # genuinely fragmented
-
-    report = cat.compact(spark, "t")
-    after = cat.read(spark, "t")
-    assert after.count() == before_rows
-    assert after.agg(F.sum("score")).collect()[0][0] == before_sum
-    assert _file_count(cat.path("t")) == 4  # one file per bucket at target
-    assert set(after.columns) == set(before.columns)  # bucket col preserved
-    assert all(b > a for b, a in report.values()) and len(report) == 4
-
-    # idempotent: second run is a no-op
-    assert cat.compact(spark, "t") == {}
-
-
-def test_compact_unpartitioned_table(spark, tmp_path):
-    cat = Catalog(str(tmp_path))
-    df = spark.range(500).select(F.col("id").alias("k"))
-    cat.write(df.repartition(6), "u")
-    cat.write(df.repartition(6), "u", mode="append")
-    assert _file_count(cat.path("u")) == 12
-    report = cat.compact(spark, "u")
-    assert report == {".": (12, 1)}
-    assert cat.read(spark, "u").count() == 1000
 
 
 def test_snapshot_write_read_time_travel(spark, tmp_path):
@@ -113,18 +59,6 @@ def test_plain_read_serves_current_snapshot(spark, tmp_path):
     assert got.count() == 4 and got.select(F.max("gen")).first()[0] == 1
 
 
-def test_compact_versioned_table_compacts_current_only(spark, tmp_path):
-    """compact() on a snapshot-versioned table must rewrite the CURRENT
-    version dir, leaving every other snapshot readable."""
-    cat = Catalog(str(tmp_path))
-    cat.write_snapshot(spark.range(64).repartition(16), "t")
-    cat.write_snapshot(spark.range(128).repartition(16), "t")
-    report = cat.compact(spark, "t", target_bytes=1 << 30)
-    assert report and list(report.values())[0][1] == 1
-    assert cat.read_snapshot(spark, "t").count() == 128        # current intact
-    assert cat.read_snapshot(spark, "t", version=1).count() == 64  # v1 survives
-
-
 def test_expire_manifest_first_and_orphan_sweep(spark, tmp_path):
     """Orphaned _vN dirs (crashed expire) are swept on the next expire;
     the manifest never references deleted data."""
@@ -167,7 +101,9 @@ def test_expired_run_ids_survive_retention(spark, tmp_path):
     for i in (1, 2, 3):
         cat.write_snapshot(spark.range(i), "t", run_id=f"r{i}")
     cat.expire_snapshots("t", keep=1)
-    assert cat.snapshot_run_ids("t") == {"r1", "r2", "r3"}
+    man = cat._snapshot_manifest("t")
+    assert man["expired_run_ids"] == ["r1", "r2"]
+    assert [m["run_id"] for m in man["versions"].values()] == ["r3"]
     # and a replay of an expired run_id is still a no-op
     v = cat.write_snapshot(spark.range(50), "t", run_id="r1")
     assert v == cat._snapshot_manifest("t")["current"]

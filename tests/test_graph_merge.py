@@ -77,20 +77,30 @@ def test_empty_delta_is_identity(spark, canon_halves):
     assert _vrows(merge_vertices(va, empty)) == _vrows(va)
 
 
+def _write_build(catalog, canon, run_id):
+    """Write a bucketed vertices/edges build of ``canon`` as plain tables."""
+    from deepex_spark.operators.graph import with_edge_bucket, with_vertex_bucket, write_graph
+
+    write_graph(
+        lambda df, table: catalog.write(df, table, partition_by=["bucket"]),
+        with_vertex_bucket(build_vertices(canon, run_id)),
+        with_edge_bucket(build_edges(canon, run_id)),
+    )
+
+
 def test_maintain_job_snapshot_merge(spark, tmp_path, canon_halves):
-    """End-to-end incremental maintenance: materialize batch A as the live
-    KG, batch B as a delta catalog, run jobs/maintain_kg.maintain — the
+    """End-to-end incremental maintenance: write batch A as the live KG,
+    batch B as a delta catalog, run jobs/maintain_kg.maintain — the
     published snapshot must equal the single-batch build over A ∪ B, and
     the table is now snapshot-versioned (v1)."""
-    from deepex_spark.operators.graph import materialize_graph
     from deepex_spark.plans.catalog import Catalog
     from jobs.maintain_kg import maintain
 
     full, a, b = canon_halves
     live = Catalog(str(tmp_path / "live"))
     delta = Catalog(str(tmp_path / "delta"))
-    materialize_graph(a, live, run_id="runA")
-    materialize_graph(b, delta, run_id="runB")
+    _write_build(live, a, "runA")
+    _write_build(delta, b, "runB")
 
     report = maintain(spark, live, delta, run_id="m1")
     assert report["vertices"][0] == 1 and report["edges"][0] == 1
@@ -107,22 +117,22 @@ def test_maintain_job_idempotent_per_run_id(spark, tmp_path, canon_halves):
     """Retrying maintain with the SAME run_id (the partial-failure
     recovery protocol) must NOT re-merge the delta — statistics stay
     identical, no new snapshot version is published."""
-    from deepex_spark.operators.graph import materialize_graph
     from deepex_spark.plans.catalog import Catalog
     from jobs.maintain_kg import maintain
 
     _full, a, b = canon_halves
     live = Catalog(str(tmp_path / "live"))
     delta = Catalog(str(tmp_path / "delta"))
-    materialize_graph(a, live, run_id="runA")
-    materialize_graph(b, delta, run_id="runB")
+    _write_build(live, a, "runA")
+    _write_build(delta, b, "runB")
 
     r1 = maintain(spark, live, delta, run_id="m1")
     r2 = maintain(spark, live, delta, run_id="m1")  # retry
     assert r1 == r2  # same versions, same counts — nothing double-merged
     # only m1's publication exists; the retry did not publish
-    assert live.snapshot_run_ids("vertices") == {"m1"}
-    assert live._snapshot_manifest("vertices")["current"] == r1["vertices"][0]
+    man = live._snapshot_manifest("vertices")
+    assert [m["run_id"] for m in man["versions"].values()] == ["m1"]
+    assert man["current"] == r1["vertices"][0]
 
     # a LATE retry of m1 after a subsequent merge reports m1's OWN
     # version, not whatever is current (mechanics check: m2 reuses the
@@ -134,43 +144,23 @@ def test_maintain_job_idempotent_per_run_id(spark, tmp_path, canon_halves):
     assert live._snapshot_manifest("vertices")["current"] > r1["vertices"][0]
 
 
-def test_materialize_graph_writes_both_tables_in_callers_job_group(
-    spark, tmp_path, canon_halves, run_in_job_group
-):
-    """materialize_graph writes vertices and edges side by side
-    (write_graph): every job of both writes runs in the caller's job
-    group, both tables equal the plain builds, and on a snapshot-versioned
-    catalog a rebuild publishes a new snapshot of each table."""
-    from deepex_spark.operators.graph import (
-        materialize_graph,
-        with_edge_bucket,
-        with_vertex_bucket,
-    )
+def test_maintain_job_refuses_missing_live_table(spark, tmp_path, canon_halves):
+    """A live catalog without the table fails loudly instead of
+    publishing the delta alone as the KG."""
     from deepex_spark.plans.catalog import Catalog
+    from jobs.maintain_kg import maintain
 
-    full, a, _b = canon_halves
-    cat = Catalog(str(tmp_path / "kg"))
-    _, grouped, ungrouped = run_in_job_group(lambda: materialize_graph(full, cat, run_id="r1"))
-    assert grouped and not ungrouped
-    assert _vrows(cat.read(spark, "vertices")) == _vrows(build_vertices(full))
-    assert _erows(cat.read(spark, "edges")) == _erows(build_edges(full))
-
-    versioned = Catalog(str(tmp_path / "versioned"))
-    versioned.write_snapshot(with_vertex_bucket(build_vertices(a)), "vertices",
-                             partition_by=["bucket"], run_id="m1")
-    versioned.write_snapshot(with_edge_bucket(build_edges(a)), "edges",
-                             partition_by=["bucket"], run_id="m1")
-    materialize_graph(full, versioned, run_id="rebuild")
-    for table in ("vertices", "edges"):
-        assert versioned.version_of_run(table, "rebuild") == 2
-    assert _vrows(versioned.read(spark, "vertices")) == _vrows(build_vertices(full))
-    assert _erows(versioned.read(spark, "edges")) == _erows(build_edges(full))
+    live = Catalog(str(tmp_path / "live"))
+    delta = Catalog(str(tmp_path / "delta"))
+    _write_build(delta, canon_halves[2], "runB")
+    with pytest.raises(ValueError, match="no 'vertices' table"):
+        maintain(spark, live, delta, run_id="m1")
+    assert not live.exists("vertices") and not live.exists("edges")
 
 
 def test_write_graph_raises_after_both_writes_end(spark, tmp_path, canon_halves):
     """A failing table write re-raises out of write_graph, but only once
     the other table's write has ended: the edges land in full."""
-    from deepex_spark.operators.graph import materialize_graph
     from deepex_spark.plans.catalog import Catalog
 
     class FailingVertices(Catalog):
@@ -182,7 +172,7 @@ def test_write_graph_raises_after_both_writes_end(spark, tmp_path, canon_halves)
     full = canon_halves[0]
     cat = FailingVertices(str(tmp_path / "kg"))
     with pytest.raises(RuntimeError, match="vertices write failed"):
-        materialize_graph(full, cat)
+        _write_build(cat, full, "run0")
     assert not cat.exists("vertices")
     assert _erows(cat.read(spark, "edges")) == _erows(build_edges(full))
 

@@ -72,7 +72,7 @@ def test_fold_equals_batch_build(spark, tmp_path):
     from deepex_spark.plans.catalog import Catalog
     from deepex_spark.streaming.kg_stream import fold_batch
 
-    catalog = Catalog(str(tmp_path / "wh"), spark=spark)
+    catalog = Catalog(str(tmp_path / "wh"))
     fold = fold_batch(catalog, "edges")
 
     fold(spark.createDataFrame(BATCH_A, TRIPLES_SCHEMA), 0)
@@ -84,6 +84,23 @@ def test_fold_equals_batch_build(spark, tmp_path):
     )
 
 
+def test_fold_into_plain_table_merges(spark, tmp_path):
+    """A plain ``edges`` table (a build's layout, not yet versioned) is
+    merged into, not replaced: folding A and then B into a plain table
+    holding A reads back build(A ∪ B) with lineage."""
+    from deepex_spark.plans.catalog import Catalog
+    from deepex_spark.streaming.kg_stream import batch_edges, fold_batch
+
+    catalog = Catalog(str(tmp_path / "wh"))
+    catalog.write(batch_edges(spark.createDataFrame(BATCH_A, TRIPLES_SCHEMA)), "edges")
+    fold = fold_batch(catalog, "edges")
+
+    fold(spark.createDataFrame(BATCH_B, TRIPLES_SCHEMA), 0)
+    assert catalog.is_versioned("edges")
+    assert _edges(spark, catalog, "edges") == _batch_build(spark, BATCH_A + BATCH_B)
+    assert {"run_id", "src_partition"} <= set(catalog.read(spark, "edges").columns)
+
+
 def test_replayed_batch_is_not_double_applied(spark, tmp_path):
     """Simulate the crash window between snapshot publish and offset
     commit: call the foreachBatch fold directly with the SAME batch_id
@@ -92,7 +109,7 @@ def test_replayed_batch_is_not_double_applied(spark, tmp_path):
     from deepex_spark.plans.catalog import Catalog
     from deepex_spark.streaming.kg_stream import fold_batch
 
-    catalog = Catalog(str(tmp_path / "wh"), spark=spark)
+    catalog = Catalog(str(tmp_path / "wh"))
     fold = fold_batch(catalog, "edges", run_prefix="t")
     df = spark.createDataFrame(BATCH_A, TRIPLES_SCHEMA)
 
